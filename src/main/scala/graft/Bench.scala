@@ -56,7 +56,9 @@ object Bench {
     * path and exclude the one-time layout write. Disclosed in-band
     * (`warm_ingest` in the JSON) so a judge reads their steady-state
     * numbers as warm-by-contract, not as a missing write (round-15
-    * verdict item 7). The oracle verifies their OUTPUT either way. */
+    * verdict item 7). The oracle verifies their OUTPUT either way.
+    * `ingest_compact` is warm only in its fragmented landing zone: its
+    * compaction rewrite still runs, and is billed, every call. */
   val WarmIngest: Seq[String] = Seq("ingest_bucketed", "ingest_compact",
     "ingest_evolve", "ingest_orc", "ingest_sorted", "ingest_zorder")
 

@@ -1,6 +1,8 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver-generated parquet fixtures (`TESTDATA.md`,
   * `FIXTURES.md`). The reference repo's `repository/` layer was never
@@ -10,6 +12,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * At 100 TB these would be partitioned/bucketed table roots instead of
   * single files; the API shape (name → DataFrame) is unchanged.
+  *
+  * Footer schemas are memoised per JVM ([[parquet]]): a table root's
+  * schema is inferred once per qualified path and stamp — the root's
+  * length and modification time plus the session's parquet inference
+  * confs — and every later read declares it, so building a query runs
+  * no schema-inference job. A rewritten root (new mtime or length) or
+  * a flipped inference conf is re-inferred. Only the root's OWN status
+  * is stamped: a file rewritten in place below a directory root, or an
+  * object store that keeps no directory mtimes, is not seen, so such
+  * roots must be immutable (write a new root, then point readers at
+  * it).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -19,7 +32,49 @@ object Tables {
   /** Load one fixture table from `dir` (e.g. /root/testdata/sf0.01). */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  /** The session confs parquet schema inference reads
+    * (`ParquetToSparkSchemaConverter` and the footer merge): a change
+    * to any of them can change the inferred type of an unchanged file. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive")
+
+  /** qualified path → (stamp, inferred schema); one entry per path, a
+    * new stamp replaces the old entry. */
+  private type Stamp = (Long, Long, Seq[Option[String]])
+  private val footerSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  /** `spark.read.parquet(path)` of one table root (a file or directory,
+    * not a glob) without the footer-inference job Spark runs on every
+    * bare read. Every call still builds a NEW DataFrame (fresh
+    * attribute ids, so self-joins of two reads stay unambiguous); only
+    * the StructType is reused. Two threads missing together both infer
+    * and the last put wins — same schema, no lock held across a job. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val stamp: Stamp = (st.getLen, st.getModificationTime, inferenceConfs.map(spark.conf.getOption))
+    val key = st.getPath.toString
+    val hit = footerSchemas.get(key)
+    val schema =
+      if (hit != null && hit._1 == stamp) hit._2
+      else {
+        val inferred = spark.read.parquet(path).schema
+        footerSchemas.put(key, (stamp, inferred))
+        inferred
+      }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** `events.ts` has shipped in two parquet flavors across fixture
     * generations: TIMESTAMP(NANOS) — which Spark's reader rejects
@@ -35,7 +90,7 @@ object Tables {
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     val ts =
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz")

@@ -115,9 +115,10 @@ object Streams extends QueryPack {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the fixture's ts flavor varies by generation (raw-nanos LONG vs
     // native TIMESTAMP(MICROS) — see graft.io.Tables.events); a file
-    // stream needs an explicit schema, so probe the footer type with a
-    // metadata-only batch read and declare the matching stream schema.
-    val tsType = s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    // stream needs an explicit schema, so take the footer type from the
+    // memoised batch schema (no inference job after the first read)
+    // and declare the matching stream schema.
+    val tsType = graft.io.Tables.parquet(s, s"$dir/events.parquet").schema("ts").dataType
     // file-stream source needs a directory or glob basePath; the
     // single-char glob class makes it treat $dir as the base dir.
     val raw = s.readStream.schema(eventsSchema(tsType))

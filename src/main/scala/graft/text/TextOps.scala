@@ -78,10 +78,12 @@ object TextOps extends QueryPack {
     // one RDD, so explode+distinct+windows run once and the second side
     // reads the materialized blocks (lazy, not eager, so merely
     // CONSTRUCTING the query — PlanSpec does — executes nothing). The
-    // cache is the df-capped shingle table: sized by corpus shingles,
-    // partitioned, MEMORY_AND_DISK — the standard space-for-recompute
-    // trade, and strictly smaller than recomputing two window passes
-    // over it per consumer.
+    // checkpoint holds the shingle stream from BEFORE the df cap (sz
+    // below must count each doc's full distinct set), hot shingles
+    // included, and the cap filter re-runs on each self-join side: a
+    // larger cache than the capped table would be, sized by corpus
+    // shingles, partitioned, MEMORY_AND_DISK — still the standard
+    // space-for-recompute trade against two window passes per consumer.
     val shW = docs(s, dir)
       // native word_ngrams Generator (graft.functions.WordNGrams): one
       // Generate node straight off the text column — replaces the

@@ -172,4 +172,9 @@ class BenchRenderSpec extends AnyFunSuite {
     assert(j.get("errors").get("exploding_query").asText().contains("boom"))
     assert(line.length <= Bench.StdoutBudget)
   }
+
+  test("every warm_ingest name is a registered query") {
+    val unknown = Bench.WarmIngest.filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"warm_ingest names no query: $unknown")
+  }
 }

@@ -392,7 +392,7 @@ class PlanSpec extends AnyFunSuite {
     val nJoins =
       "\\(\\d+\\) (SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)".r
         .findAllIn(p).size
-    assert(nJoins <= 2, s"expected <= 2 joins (degree attach), got $nJoins")
+    assert(nJoins == 2, s"expected 2 joins (degree attach), got $nJoins")
     assert(p.contains("TakeOrderedAndProject"), p.take(800))
     assert(!p.contains("CartesianProduct") &&
            !p.contains("BroadcastNestedLoopJoin"), p.take(1200))

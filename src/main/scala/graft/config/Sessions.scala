@@ -56,40 +56,28 @@ object Sessions {
                  2L * s.sparkContext.defaultParallelism).toInt
       }
 
-  /** Run `f` with `spark.sql.shuffle.partitions` capped at `n`,
-    * restoring the previous value after.
-    *
-    * Streaming queries materialize one state-store INSTANCE per shuffle
-    * partition, each with fixed per-micro-batch overhead (snapshot,
-    * maintenance thread, commit) that is independent of data volume —
-    * at toy scale 32 instances cost ~10× the actual work. State
-    * partition count is fixed at first checkpoint, so the cap must wrap
-    * query START; on a real cluster this is sized once via config to
-    * match state volume, not core count.
+  /** The one shuffle-width scope: run `f` with
+    * `spark.sql.shuffle.partitions` set to the graft conf `conf` when
+    * it is set (a named conf is a deployment decision and is applied
+    * exactly, even above the session's shuffle setting); otherwise to
+    * `derive(current session width)`, or unscoped when that is `None`.
+    * The previous width is restored on exit.
     *
     * Mutates shared session conf: the set/restore pair is synchronized
     * on the session so concurrent callers can't interleave restores,
-    * but `f` itself runs the query-start single-threaded by design
-    * (Verify/Bench/tests all drive queries sequentially). */
-  def withShufflePartitionsCap[T](s: SparkSession, n: Int)(f: => T): T =
+    * but `f` itself runs single-threaded by design (Verify/Bench/tests
+    * all drive queries sequentially). */
+  private def withShuffleWidth[T](s: SparkSession, conf: String)(
+      derive: Int => Option[Int])(f: => T): T =
     s.synchronized {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      val prevN = scala.util.Try(prev.toInt).getOrElse(n)
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(prevN, n).toString)
-      try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    }
-
-  /** Run `f` with `spark.sql.shuffle.partitions` set to EXACTLY `n`
-    * (restored after) — the override path: a named graft conf is a
-    * deployment decision and must win even when it exceeds the
-    * session's shuffle-partition setting, which the min-cap would
-    * silently swallow. */
-  def withShufflePartitionsSet[T](s: SparkSession, n: Int)(f: => T): T =
-    s.synchronized {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", n.toString)
-      try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val key = "spark.sql.shuffle.partitions"
+      val prev = s.conf.get(key)
+      s.conf.getOption(conf).map(_.toInt).orElse(derive(prev.toInt)) match {
+        case Some(n) =>
+          s.conf.set(key, n.toString)
+          try f finally s.conf.set(key, prev)
+        case None => f
+      }
     }
 
   /** Scope a STREAMING query start to its state-store partition
@@ -100,21 +88,16 @@ object Sessions {
     * only ever lowers, so batch queries sharing the session keep
     * their parallelism. */
   def withStreamStatePartitions[T](s: SparkSession)(f: => T): T =
-    s.conf.getOption("spark.graft.stream.statePartitions") match {
-      case Some(n) => withShufflePartitionsSet(s, n.toInt)(f)
-      case None    => withShufflePartitionsCap(s, streamStatePartitions(s))(f)
-    }
+    withShuffleWidth(s, "spark.graft.stream.statePartitions")(
+      n => Some(math.min(n, streamStatePartitions(s))))(f)
 
   /** Scope a graph-iteration action block: the explicit
     * `spark.graft.graph.iterPartitions` conf is applied exactly (same
     * deployment-override contract as the streaming twin); otherwise
     * the edge-derived count caps the session setting. */
   def withGraphIterPartitions[T](s: SparkSession, edgeRows: Long)(f: => T): T =
-    s.conf.getOption("spark.graft.graph.iterPartitions") match {
-      case Some(n) => withShufflePartitionsSet(s, n.toInt)(f)
-      case None =>
-        withShufflePartitionsCap(s, graphIterPartitions(s, edgeRows))(f)
-    }
+    withShuffleWidth(s, "spark.graft.graph.iterPartitions")(
+      n => Some(math.min(n, graphIterPartitions(s, edgeRows))))(f)
 
   /** Shuffle-partition count for corpus-scale PAIR aggregation (the
     * edge-distinct / pair-dedup stage of the graph queries) — the
@@ -144,17 +127,13 @@ object Sessions {
 
   /** Scope a pair-aggregation action block to [[pairAggPartitions]] —
     * RAISES the session setting when the estimated pair volume calls
-    * for it (withShufflePartitionsSet, not the min-cap: bounding
-    * per-task state is the point, and a raise is exactly what a big
-    * input needs). `estRows <= 0` means the caller has no estimate —
-    * run unscoped rather than derive from garbage. */
+    * for it (not a cap: bounding per-task state is the point, and a
+    * raise is exactly what a big input needs). `estRows <= 0` means
+    * the caller has no estimate — run unscoped rather than derive from
+    * garbage. */
   def withPairAggPartitions[T](s: SparkSession, estRows: Long)(f: => T): T =
-    s.conf.getOption("spark.graft.graph.pairAggPartitions") match {
-      case Some(n) => withShufflePartitionsSet(s, n.toInt)(f)
-      case None if estRows > 0 =>
-        withShufflePartitionsSet(s, pairAggPartitions(s, estRows))(f)
-      case None => f
-    }
+    withShuffleWidth(s, "spark.graft.graph.pairAggPartitions")(
+      _ => Option.when(estRows > 0)(pairAggPartitions(s, estRows)))(f)
 
   /** Session storage hygiene for long-lived sessions running many
     * graft queries. The iterative operators (graph_cc / pagerank /

@@ -421,18 +421,56 @@ object VectorOps extends QueryPack {
   private[graft] def ivfNprobe(k: Int, floor: Int): Int =
     math.max(floor, math.ceil(math.sqrt(k.toDouble)).toInt)
 
-  /** Lloyd's k-means over the embedding corpus, pure DataFrame ops —
-    * the centroid-training job that feeds IVF. Per iteration: one
-    * corpus scan for assignment (broadcast centroids — the corpus
-    * never shuffles), then a per-dimension mean via posexplode +
-    * two-level agg whose output is k×dim rows (model-sized, not
-    * data-sized; the (cell,d) aggregate is partial-aggregated, so the
-    * exchange carries only model-sized partials — a fixed-width
-    * rewrite was A/B-measured slower in r16 and rejected). Seeds are
-    * fixed vec_ids, so the run is reproducible. The result is
-    * localCheckpoint'd: k×dim doubles are model state, and truncating
-    * the lineage keeps downstream plans from replaying every training
-    * pass. */
+  /** The k seed rows of every Lloyd's trainer: exactly k regardless
+    * of corpus size, preferring ids spread 100 apart (vec_id ≡ 0 mod
+    * 100), then filling from the next strata. Seeds are fixed vec_ids,
+    * so every run is reproducible. orderBy+limit(k) plans as
+    * TakeOrderedAndProject — per-partition top-k then a k-row driver
+    * merge, never a global sort. */
+  private def lloydSeeds(e: DataFrame, k: Int): DataFrame =
+    e.orderBy(pmod(col("vec_id"), lit(100)), col("vec_id")).limit(k)
+
+  /** Lloyd's k-means as relational operators — the one loop behind
+    * [[kmeansCentroids]], [[gridLloyd]] and [[pqCodebook]]. Each of
+    * `iters` passes runs `assign` on the current centroid table (one
+    * corpus scan against broadcast centroids — the corpus never
+    * shuffles), which must yield the centroid key columns `keys` and
+    * the member vector `vec`; then a per-dimension `mean` over
+    * posexplode'd coordinates grouped on (keys, d), and an
+    * `array_sort(collect_list)` rebuild of each centroid as an array
+    * column `c` next to its keys, which `out` turns back into the
+    * table `assign` reads (column names, norms, pins). Starts from
+    * `seeds`, already in that table's shape.
+    *
+    * The (keys, d) aggregate is partial-aggregated, so the exchange
+    * carries only k×dim model-sized partials. NOTE (r16): a
+    * fixed-width rewrite of this update (dim mean columns in one
+    * aggregate keyed on the centroid, no posexplode) was implemented
+    * and measured SLOWER in interleaved A/B probes — the posexplode is
+    * map-side row generation, so the rewrite bought no shuffle bytes
+    * and lost on wide-row aggregate codegen. Kept as is deliberately. */
+  private def lloyd(seeds: DataFrame, iters: Int, keys: Seq[String],
+                    vec: String, mean: Column => Column)(
+      assign: DataFrame => DataFrame,
+      out: DataFrame => DataFrame): DataFrame = {
+    val ks = keys.map(col)
+    (1 to iters).foldLeft(seeds) { (cent, _) =>
+      out(assign(cent)
+        .select(ks :+ posexplode(col(vec)).as(Seq("d", "x")): _*)
+        .groupBy(ks :+ col("d"): _*)
+        .agg(mean(col("x")).as("m"))
+        .groupBy(ks: _*)
+        .agg(array_sort(collect_list(struct(col("d"), col("m")))).as("ps"))
+        .select(ks :+ expr("transform(ps, p -> p.m)").as("c"): _*))
+    }
+  }
+
+  /** Cosine-space k-means over the embedding corpus — the
+    * centroid-training job that feeds IVF: [[lloyd]] with the flat
+    * cosine argmax ([[assignCells]]) and a float mean. The result is
+    * localCheckpoint'd once: k×dim doubles are model state, and
+    * truncating the lineage keeps downstream plans from replaying
+    * every training pass. */
   def kmeansCentroids(e: DataFrame, k: Int, iters: Int,
                       sampleMod: Int = 10): DataFrame = {
     // train on a deterministic key-modulo sample (default ~10%):
@@ -443,28 +481,13 @@ object VectorOps extends QueryPack {
     val train =
       if (sampleMod <= 1) e
       else e.where(pmod(col("vec_id"), lit(sampleMod)) === 0)
-    // exactly k seeds regardless of corpus size: prefer ids spread
-    // 100 apart (vec_id ≡ 0 mod 100), then fill from the next strata.
-    // orderBy+limit(k) plans as TakeOrderedAndProject — per-partition
-    // top-k then a k-row driver merge, never a global sort.
-    var cent = e
-      .orderBy(pmod(col("vec_id"), lit(100)), col("vec_id"))
-      .limit(k)
-      .select(col("vec_id").as("cent_id"), col("emb").as("c_emb"),
-              col("nrm").as("c_nrm"))
-    for (_ <- 1 to iters) {
-      val byDim = assignCells(train, cent)
-        .select(col("cell"), posexplode(col("emb")).as(Seq("d", "v")))
-        .groupBy(col("cell"), col("d"))
-        .agg(avg(col("v")).as("mv"))
-      cent = byDim
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("d"), col("mv")))).as("pairs"))
-        .select(col("cell").as("cent_id"),
-                expr("transform(pairs, p -> p.mv)").as("c_emb"))
-        .withColumn("c_nrm", l2Norm(col("c_emb")))
-    }
-    cent.localCheckpoint(true)
+    val seeds = lloydSeeds(e, k).select(col("vec_id").as("cent_id"),
+      col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+    lloyd(seeds, iters, Seq("cell"), "emb", avg)(
+      assignCells(train, _),
+      _.select(col("cell").as("cent_id"), col("c").as("c_emb"))
+        .withColumn("c_nrm", l2Norm(col("c_emb"))))
+      .localCheckpoint(true)
   }
 
   /** IVF-style ANN: coarse-quantize the corpus into k cells (nearest
@@ -589,14 +612,12 @@ object VectorOps extends QueryPack {
     * with g on the 1e-6 integer grid and should be checkpointed by
     * the caller (it feeds iters+1 assignment passes). Returns the
     * final assignment (vec_id, label, g, cell, d2) and the final
-    * integer centroids (cid, cg). Seeds are the k lowest ids per
-    * stratum spread (vec_id mod 100) — TakeOrderedAndProject, k rows
-    * into the plan only. */
+    * integer centroids (cid, cg). The loop is [[lloyd]] with the
+    * integer squared-L2 argmin and a mean re-snapped to the grid;
+    * every pass's centroids are pinned. */
   private[graft] def gridLloyd(eg: DataFrame, k: Int,
                                iters: Int): (DataFrame, DataFrame) = {
     import eg.sparkSession.implicits._
-    var cent = eg.orderBy(pmod($"vec_id", lit(100)), $"vec_id").limit(k)
-      .select($"vec_id".as("cid"), $"g".as("cg"))
     // native codegen'd kernel — value-identical to the HOF spelling
     // `aggregate(zip_with(g, cg, (x,y) -> (x-y)*(x-y)), 0L, ...)`
     // (exact integer sums are order-free) but a primitive loop; this
@@ -609,26 +630,11 @@ object VectorOps extends QueryPack {
            first($"g").as("g"), first($"label").as("label"))
       .select($"vec_id", $"label", $"g",
               $"m.cid".as("cell"), $"m.d2".as("d2"))
-    // NOTE (r16): a fixed-width rewrite of this update (dim sum
-    // columns in one aggregate keyed on cell, no posexplode) was
-    // implemented and measured SLOWER in interleaved A/B probes —
-    // the posexplode is map-side row generation and the (cell, pos)
-    // aggregate is partial-aggregated, so the exchange already
-    // carries only k×dim model-sized partials; the rewrite bought no
-    // shuffle bytes and lost on wide-row aggregate codegen. Kept as
-    // is deliberately.
-    for (_ <- 1 to iters) {
-      cent = assign(cent)
-        .select($"cell", posexplode($"g").as(Seq("pos", "gv")))
-        .groupBy($"cell", $"pos")
-        .agg(sum($"gv").as("sg"), count(lit(1)).as("n"))
-        .withColumn("cg1",
-          round($"sg".cast("double") / $"n".cast("double")).cast("long"))
-        .groupBy($"cell")
-        .agg(array_sort(collect_list(struct($"pos", $"cg1"))).as("ps"))
-        .select($"cell".as("cid"), expr("transform(ps, p -> p.cg1)").as("cg"))
-        .localCheckpoint(true)
-    }
+    val seeds = lloydSeeds(eg, k).select($"vec_id".as("cid"), $"g".as("cg"))
+    def gridMean(x: Column): Column =
+      round(sum(x).cast("double") / count(lit(1)).cast("double")).cast("long")
+    val cent = lloyd(seeds, iters, Seq("cell"), "g", gridMean)(
+      assign, _.select($"cell".as("cid"), $"c".as("cg")).localCheckpoint(true))
     (assign(cent), cent)
   }
 
@@ -859,51 +865,25 @@ object VectorOps extends QueryPack {
       .select(col("vec_id"), col("sub"), col("sv"),
               col("top").getItem(0).getField("id").cast("int").as("cid"))
 
-  /** [[assignPq]] minus the subvector payload — the CODE path's
-    * variant (r16): the code table is (vec_id, sub, cid) only, so
-    * carrying `first(sv)` through the argmin aggregate shuffled 8
-    * doubles per row that the caller immediately dropped (guide §2.3:
-    * shuffle keys and metadata, not payloads). Same argmin, same
-    * codes. */
-  private def assignPqCode(sv: DataFrame, cent: DataFrame): DataFrame =
-    sv.withColumn("nsv", l2Norm(col("sv")))
-      .join(broadcast(cent), Seq("sub"))
-      .withColumn("d2", l2sq(col("sv"), col("nsv"), col("cv"), col("ncv")))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(graft.functions.BoundedTopK
-             .boundedTopK(-col("d2"), col("cid"), 1).as("top"))
-      .select(col("vec_id"), col("sub"),
-              col("top").getItem(0).getField("id").cast("int").as("cid"))
-
-  /** Per-subspace Lloyd's k-means — [[kmeansCentroids]]'s shape run
-    * over all m subspaces IN ONE PLAN (subspace rides as a grouping
-    * key, so one corpus pass trains all 8 codebooks). Seeds are the
-    * stratified vec_ids' subvectors; training uses the same 10%
-    * key-modulo sample as the IVF coarse quantizer. Result (m·k rows
-    * of dsub-dim centroids) is localCheckpoint'd model state. */
+  /** Per-subspace k-means — [[lloyd]] over all m subspaces IN ONE
+    * PLAN (subspace rides as a centroid key next to cid, so one corpus
+    * pass trains all 8 codebooks), with the [[assignPq]] argmin and a
+    * float mean. Seeds are the stratified vec_ids' subvectors;
+    * training uses the same 10% key-modulo sample as the IVF coarse
+    * quantizer. Result (m·k rows of dsub-dim centroids) is
+    * localCheckpoint'd model state. */
   private def pqCodebook(e: DataFrame, iters: Int): DataFrame = {
     val train = subvecs(e.where(pmod(col("vec_id"), lit(10)) === 0))
-    val seeds = e
-      .orderBy(pmod(col("vec_id"), lit(100)), col("vec_id")).limit(PqK)
-      .select(col("vec_id"))
+    val ids = lloydSeeds(e, PqK).select(col("vec_id"))
       .withColumn("cid", (row_number().over(
         Window.orderBy(col("vec_id"))) - 1).cast("int"))
-    var cent = subvecs(e).join(broadcast(seeds), Seq("vec_id"))
+    val seeds = subvecs(e).join(broadcast(ids), Seq("vec_id"))
       .select(col("sub"), col("cid"), col("sv").as("cv"))
       .withColumn("ncv", l2Norm(col("cv")))
-    for (_ <- 1 to iters) {
-      val byDim = assignPq(train, cent)
-        .select(col("sub"), col("cid"), posexplode(col("sv")).as(Seq("d", "x")))
-        .groupBy(col("sub"), col("cid"), col("d"))
-        .agg(avg(col("x")).as("mx"))
-      cent = byDim
-        .groupBy(col("sub"), col("cid"))
-        .agg(array_sort(collect_list(struct(col("d"), col("mx")))).as("ps"))
-        .select(col("sub"), col("cid"),
-                expr("transform(ps, p -> p.mx)").as("cv"))
-        .withColumn("ncv", l2Norm(col("cv")))
-    }
-    cent.localCheckpoint(true)
+    lloyd(seeds, iters, Seq("sub", "cid"), "sv", avg)(
+      assignPq(train, _),
+      _.withColumnRenamed("c", "cv").withColumn("ncv", l2Norm(col("cv"))))
+      .localCheckpoint(true)
   }
 
   /** ANN over PQ codes with asymmetric-distance (ADC) scoring — the
@@ -933,7 +913,7 @@ object VectorOps extends QueryPack {
     val shortlist = 50
     val e = emb(s, dir)
     val cent = pqCodebook(e, iters = 2)
-    val codes = assignPqCode(subvecs(e), cent)
+    val codes = assignPq(subvecs(e), cent).drop("sv")
     val qTable = subvecs(e.where($"vec_id" < 5))
       .withColumn("nsv", l2Norm($"sv"))
       .join(broadcast(cent), Seq("sub"))

@@ -632,7 +632,7 @@ class OperatorSpec extends AnyFunSuite {
       .head().getLong(0) == 1275L)
   }
 
-  test("explicit graft partition confs RAISE past the session shuffle setting; defaults only lower") {
+  test("explicit graft partition confs win over the session shuffle setting; derived widths cap (stream, graph) or raise (pair-agg)") {
     import graft.config.Sessions
     val key = "spark.sql.shuffle.partitions"
     val sessionN = spark.conf.get(key).toInt
@@ -655,7 +655,21 @@ class OperatorSpec extends AnyFunSuite {
       spark.conf.get(key).toInt
     } == sessionN + 50)
     finally spark.conf.unset("spark.graft.graph.iterPartitions")
-    // and both restore the session value on exit
+    // pair-agg: the explicit conf beats the derivation; without it a
+    // large estimate RAISES the width, and no estimate (estRows <= 0)
+    // leaves the session width untouched
+    def pairWidth(estRows: Long): Int =
+      Sessions.withPairAggPartitions(spark, estRows) {
+        spark.conf.get(key).toInt
+      }
+    val bigEst = 524288L * (sessionN + 100)
+    spark.conf.set("spark.graft.graph.pairAggPartitions", (sessionN + 7).toString)
+    try assert(pairWidth(bigEst) == sessionN + 7)
+    finally spark.conf.unset("spark.graft.graph.pairAggPartitions")
+    assert(pairWidth(bigEst) == sessionN + 101)
+    assert(pairWidth(0L) == sessionN)
+    assert(pairWidth(-1L) == sessionN)
+    // and every scope restores the session value on exit
     assert(spark.conf.get(key).toInt == sessionN)
   }
 

@@ -538,4 +538,47 @@ class PropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("gridLloyd equals an exact-integer Lloyd's reference on random grid corpora") {
+    // Plain-Scala replay of the integer construction: seeds ordered by
+    // (vec_id mod 100, vec_id), argmin ties to the lower cid, a cell
+    // with no members drops out, and each mean re-snaps half away from
+    // zero as Spark's round does. The narrow coordinate span forces
+    // distance ties and .5 means; the wide one is the 1e-6 grid's range.
+    import spark.implicits._
+    val n = 40; val dim = 8; val k = 4; val iters = 3
+    for ((trial, span) <- Seq(1 -> 3L, 2 -> 3L, 3 -> 1000000L)) {
+      val ids = Gen.pick(n, 0L until 1000L)
+        .apply(Gen.Parameters.default, rng.Seed(500L + trial)).get.toSeq
+      val gs = Gen.listOfN(n, Gen.listOfN(dim, Gen.chooseNum(-span, span)))
+        .apply(Gen.Parameters.default, rng.Seed(600L + trial)).get
+      val corpus: Map[Long, Seq[Long]] = ids.zip(gs).toMap
+      val (fin, cent) = graft.vec.VectorOps.gridLloyd(
+        ids.zip(gs).map { case (id, g) => (id, 0, g) }.toDF("vec_id", "label", "g"),
+        k, iters)
+      val got = fin.select($"vec_id", $"cell", $"d2").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val gotCent = cent.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+
+      def d2(a: Seq[Long], b: Seq[Long]): Long =
+        a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+      def assign(c: Map[Long, Seq[Long]]): Map[Long, (Long, Long)] =
+        corpus.map { case (id, g) =>
+          id -> c.iterator.map { case (cid, cg) => (d2(g, cg), cid) }.min }
+      val seeds = ids.sortBy(id => (id % 100, id)).take(k)
+        .map(id => id -> corpus(id)).toMap
+      val expCent = (1 to iters).foldLeft(seeds) { (c, _) =>
+        assign(c).groupBy(_._2._2).map { case (cid, members) =>
+          cid -> (0 until dim).map { d =>
+            val s = members.keys.toSeq.map(corpus(_)(d)).sum
+            BigDecimal(s.toDouble / members.size.toDouble)
+              .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+          }
+        }
+      }
+      val exp = assign(expCent).map { case (id, (dd, cid)) => id -> (cid, dd) }
+      assert(gotCent == expCent, s"trial $trial: centroids")
+      assert(got == exp, s"trial $trial: assignments")
+    }
+  }
 }

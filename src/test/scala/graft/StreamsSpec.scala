@@ -51,7 +51,9 @@ class StreamsSpec extends AnyFunSuite {
     val prevCk = spark.conf.getOption(
       "spark.sql.streaming.checkpoint.fileChecksum.enabled")
     spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    try graft.config.Sessions.withShufflePartitionsCap(spark, 2) {
+    val prevParts = spark.conf.getOption("spark.graft.stream.statePartitions")
+    spark.conf.set("spark.graft.stream.statePartitions", "2")
+    try graft.config.Sessions.withStreamStatePartitions(spark) {
       implicit val sqlCtx = spark.sqlContext
       // ProcessingTime mode keeps scheduling eviction micro-batches
       // forever (even under AvailableNow — observed 100+ empty batches
@@ -113,6 +115,10 @@ class StreamsSpec extends AnyFunSuite {
       prevCk match {
         case Some(p) => spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", p)
         case None => spark.conf.unset("spark.sql.streaming.checkpoint.fileChecksum.enabled")
+      }
+      prevParts match {
+        case Some(p) => spark.conf.set("spark.graft.stream.statePartitions", p)
+        case None => spark.conf.unset("spark.graft.stream.statePartitions")
       }
     }
   }

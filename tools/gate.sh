@@ -2,7 +2,7 @@
 # Pre-snapshot gate: EVERYTHING the driver will check, one command.
 # Run from /root/repo before ANY end-of-round (or milestone) commit:
 #
-#   bash tools/gate.sh            # full: compile + tests + verify + check + bench smoke
+#   bash tools/gate.sh            # full: compile + bench harness + tests + verify + check + bench smoke
 #   bash tools/gate.sh --fast     # skip the test suite (verify+check only)
 #   bash tools/gate.sh --worlds   # ALSO run the adversarial-world
 #                                 # differentials: null-planted payloads,
@@ -29,6 +29,20 @@ FAST=${1:-}
 echo "== gate: compile (main + test) =="
 sbt -batch Test/compile > /tmp/gate_compile.log 2>&1 \
   || { tail -30 /tmp/gate_compile.log; echo "GATE FAIL: compile"; exit 1; }
+
+# the benchmark harness (perfbench/) compiles against the program's
+# API and runs its own unit tests, so an API change it depends on
+# fails here rather than in the benchmark; Spark's jars are found the
+# way perfbench/run.py finds them
+echo "== gate: benchmark harness build + unit tests =="
+spark_home=${SPARK_HOME:-$(dirname "$(dirname "$(readlink -f "$(command -v spark-submit)")")")}
+bash perfbench/build.sh /tmp/gate_bench_build "$spark_home/jars" \
+  > /tmp/gate_bench_build.log 2>&1 \
+  || { tail -30 /tmp/gate_bench_build.log; echo "GATE FAIL: bench harness build"; exit 1; }
+PYTHONDONTWRITEBYTECODE=1 python3 -m unittest discover -s perfbench -p 'test_*.py' \
+  > /tmp/gate_bench_unit.log 2>&1 \
+  || { tail -30 /tmp/gate_bench_unit.log; echo "GATE FAIL: bench harness tests"; exit 1; }
+tail -1 /tmp/gate_bench_unit.log
 
 if [[ "$FAST" != "--fast" ]]; then
   echo "== gate: scalatest =="

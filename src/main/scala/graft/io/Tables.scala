@@ -1,7 +1,11 @@
 package graft.io
 
+import java.lang.ref.WeakReference
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation
 import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver-generated parquet fixtures (`TESTDATA.md`,
@@ -23,11 +27,16 @@ import org.apache.spark.sql.types.StructType
   * object store that keeps no directory mtimes, is not seen, so such
   * roots must be immutable (write a new root, then point readers at
   * it).
+  *
+  * Temp views over the fixtures are memoised per session ([[view]]):
+  * a table is registered once per session, qualified root and stamp,
+  * and a later call finds the catalog still holding that very entry.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
+  /** The TPC-H star: the tables the SQL surface reads. */
+  val tpch: Seq[String] = Seq(
+    "region", "nation", "customer", "supplier", "part", "orders", "lineitem")
+  val names: Seq[String] = tpch ++ Seq("events", "documents", "embeddings")
 
   /** Load one fixture table from `dir` (e.g. /root/testdata/sf0.01). */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -48,11 +57,20 @@ object Tables {
     "spark.sql.parquet.respectSummaryFiles",
     "spark.sql.caseSensitive")
 
+  private type Stamp = (Long, Long, Seq[Option[String]])
+
+  /** A root's qualified path and stamp: its own length and mtime plus
+    * the session's inference confs. Both memos key on this. */
+  private def stamped(spark: SparkSession, path: String): (String, Stamp) = {
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    (st.getPath.toString,
+     (st.getLen, st.getModificationTime, inferenceConfs.map(spark.conf.getOption)))
+  }
+
   /** qualified path → (stamp, inferred schema); one entry per path, a
     * new stamp replaces the old entry. */
-  private type Stamp = (Long, Long, Seq[Option[String]])
-  private val footerSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String, (Stamp, StructType)]()
+  private val footerSchemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
 
   /** `spark.read.parquet(path)` of one table root (a file or directory,
     * not a glob) without the footer-inference job Spark runs on every
@@ -61,10 +79,7 @@ object Tables {
     * the StructType is reused. Two threads missing together both infer
     * and the last put wins — same schema, no lock held across a job. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    val p = new Path(path)
-    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-    val stamp: Stamp = (st.getLen, st.getModificationTime, inferenceConfs.map(spark.conf.getOption))
-    val key = st.getPath.toString
+    val (key, stamp) = stamped(spark, path)
     val hit = footerSchemas.get(key)
     val schema =
       if (hit != null && hit._1 == stamp) hit._2
@@ -74,6 +89,35 @@ object Tables {
         inferred
       }
     spark.read.schema(schema).parquet(path)
+  }
+
+  /** session → view name → (qualified root, stamp, the catalog entry
+    * [[view]] registered). Weak on the session, since temp views die
+    * with it, and on the entry, whose plan holds the session and would
+    * otherwise keep the key alive. */
+  private val registered = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      ConcurrentHashMap[String, (String, Stamp, WeakReference[TemporaryViewRelation])]]())
+
+  /** `t(spark, dir, name).createOrReplaceTempView(name)`, skipped when
+    * this session's catalog still holds the entry an earlier call
+    * registered for the same qualified root and [[parquet]] stamp. The
+    * entry is checked by identity, so a view another caller replaced
+    * or dropped is registered again, as is one over another `dir`, a
+    * rewritten root or a flipped inference conf; the immutable-root
+    * rule above applies unchanged. Two threads missing together both
+    * register the same table and the last one wins. */
+  def view(spark: SparkSession, dir: String, name: String): Unit = {
+    val (root, stamp) = stamped(spark, s"$dir/$name.parquet")
+    val catalog = spark.sessionState.catalog
+    val mine = registered.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+    val hit = mine.get(name)
+    val live = hit != null && hit._1 == root && hit._2 == stamp &&
+      catalog.getRawTempView(name).exists(_ eq hit._3.get)
+    if (!live) {
+      t(spark, dir, name).createOrReplaceTempView(name)
+      catalog.getRawTempView(name).foreach(v => mine.put(name, (root, stamp, new WeakReference(v))))
+    }
   }
 
   /** `events.ts` has shipped in two parquet flavors across fixture

@@ -7,8 +7,9 @@ import graft.util.Det._
 
 /** Raw-SQL entry surface (reference taxonomy `src/etl/sql/` —
   * SURVEY.md §0.2: planned but never implemented; this is its
-  * Spark-native form). Fixture tables register as temp views and the
-  * queries run through `spark.sql`, exercising the parser plus the
+  * Spark-native form). The TPC-H fixture tables register as temp views
+  * (once per session and table stamp, `Tables.view`) and the queries
+  * run through `spark.sql`, exercising the parser plus the
   * subquery machinery the DataFrame packs don't reach:
   *
   *  - `sql_exists`    → RewritePredicateSubquery (EXISTS → left-semi)
@@ -23,9 +24,7 @@ import graft.util.Det._
 object SqlQueries extends QueryPack {
 
   private def views(s: SparkSession, dir: String): Unit =
-    Tables.names.foreach { n =>
-      Tables.t(s, dir, n).createOrReplaceTempView(n)
-    }
+    Tables.tpch.foreach(Tables.view(s, dir, _))
 
   /** TPC-H Q4 shape: order-priority histogram of orders having at
     * least one returned lineitem (fixture lineitem carries no

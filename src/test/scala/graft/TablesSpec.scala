@@ -7,14 +7,20 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.command.CreateViewCommand
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io.Tables
 
 /** `Tables.parquet`'s footer-schema memo: a repeat read of an
   * unchanged table runs no Spark job, a rewritten file or a flipped
   * inference conf is re-inferred, and every read is still a fresh
-  * DataFrame. */
+  * DataFrame. `Tables.view`'s temp-view memo: a repeat registration
+  * runs no command, and a rewritten root, a foreign replacement,
+  * another directory or another session registers again. */
 class TablesSpec extends AnyFunSuite {
   lazy val spark = SparkSpec.session
   import spark.implicits._
@@ -43,6 +49,49 @@ class TablesSpec extends AnyFunSuite {
       groups.toArray.count(_ == "tables-spec-probe")
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `CreateViewCommand`s `session` runs while `body` runs. Listener
+    * callbacks arrive asynchronously but in order, and a callback still
+    * queued from earlier work can reach a listener registered after it
+    * ran, so only commands seen between a start and an end sentinel
+    * query count. */
+  private def viewCommandsDuring(session: SparkSession)(body: => Unit): Int = {
+    val commands = new java.util.concurrent.atomic.AtomicInteger()
+    val started = new CountDownLatch(1)
+    val ended = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.logical match {
+          case _: CreateViewCommand if started.getCount == 0 => commands.incrementAndGet()
+          case _ => qe.analyzed.output.map(_.name) match {
+            case Seq("tables_spec_start") => started.countDown()
+            case Seq("tables_spec_end")   => ended.countDown()
+            case _ =>
+          }
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def sentinel(name: String, seen: CountDownLatch): Unit = {
+      session.range(1).toDF(name).collect()
+      assert(seen.await(60, TimeUnit.SECONDS), s"$name query never reached the listener")
+    }
+    session.listenerManager.register(listener)
+    try {
+      sentinel("tables_spec_start", started)
+      body
+      sentinel("tables_spec_end", ended)
+      commands.get
+    } finally session.listenerManager.unregister(listener)
+  }
+
+  private def rawView(session: SparkSession, name: String) =
+    session.sessionState.catalog.getRawTempView(name)
+
+  private def writeNation(path: String, keys: Seq[Long]): Unit =
+    keys.toDF("n_nationkey").write.mode("overwrite").parquet(path)
+
+  private def nationKeys(session: SparkSession): Seq[Long] =
+    session.sql("SELECT n_nationkey FROM nation ORDER BY 1").collect().map(_.getLong(0)).toSeq
 
   private def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -111,5 +160,78 @@ class TablesSpec extends AnyFunSuite {
                        Tables.t(spark, SparkSpec.sfDir, "nation"))
     assert(cached.nonEmpty)
     assert(cached == pairs(spark.read.parquet(path), spark.read.parquet(path)))
+  }
+
+  test("a repeat view registration keeps the catalog entry and runs no command") {
+    val dir = tempDir("graft_view_repeat")
+    writeNation(s"$dir/nation.parquet", Seq(1L, 2L))
+    assert(viewCommandsDuring(spark)(Tables.view(spark, dir, "nation")) == 1)
+    val entry = rawView(spark, "nation").get
+    assert(viewCommandsDuring(spark)(Tables.view(spark, dir, "nation")) == 0)
+    assert(rawView(spark, "nation").get eq entry)
+    assert(nationKeys(spark) == Seq(1L, 2L))
+  }
+
+  test("a rewritten root is registered again and queries see its new rows") {
+    val dir = tempDir("graft_view_rewrite")
+    val path = s"$dir/nation.parquet"
+    writeNation(path, Seq(1L))
+    Tables.view(spark, dir, "nation")
+    assert(nationKeys(spark) == Seq(1L))
+    val before = new java.io.File(path).lastModified
+    writeNation(path, Seq(3L, 4L, 5L))
+    // a new mtime even on a filesystem with coarse timestamps
+    assert(new java.io.File(path).setLastModified(before + 2000))
+    assert(viewCommandsDuring(spark)(Tables.view(spark, dir, "nation")) == 1)
+    assert(nationKeys(spark) == Seq(3L, 4L, 5L))
+  }
+
+  test("a view replaced by a foreign createOrReplaceTempView is registered again") {
+    val dir = tempDir("graft_view_foreign")
+    writeNation(s"$dir/nation.parquet", Seq(7L))
+    Tables.view(spark, dir, "nation")
+    Seq(99L).toDF("n_nationkey").createOrReplaceTempView("nation")
+    assert(nationKeys(spark) == Seq(99L))
+    assert(viewCommandsDuring(spark)(Tables.view(spark, dir, "nation")) == 1)
+    assert(nationKeys(spark) == Seq(7L))
+    spark.catalog.dropTempView("nation")
+    assert(viewCommandsDuring(spark)(Tables.view(spark, dir, "nation")) == 1)
+    assert(nationKeys(spark) == Seq(7L))
+  }
+
+  test("another dir for the same name is registered again") {
+    val a = tempDir("graft_view_dir_a")
+    val b = tempDir("graft_view_dir_b")
+    writeNation(s"$a/nation.parquet", Seq(1L))
+    writeNation(s"$b/nation.parquet", Seq(2L))
+    // the same length and mtime, so only the root tells them apart
+    val (fa, fb) = (new java.io.File(s"$a/nation.parquet"), new java.io.File(s"$b/nation.parquet"))
+    assert(fb.setLastModified(fa.lastModified) && fa.length == fb.length)
+    Tables.view(spark, a, "nation")
+    assert(viewCommandsDuring(spark)(Tables.view(spark, b, "nation")) == 1)
+    assert(nationKeys(spark) == Seq(2L))
+    assert(viewCommandsDuring(spark)(Tables.view(spark, a, "nation")) == 1)
+    assert(nationKeys(spark) == Seq(1L))
+  }
+
+  test("a new session gets its own registration") {
+    val dir = tempDir("graft_view_session")
+    writeNation(s"$dir/nation.parquet", Seq(4L))
+    Tables.view(spark, dir, "nation")
+    val other = spark.newSession()
+    assert(rawView(other, "nation").isEmpty)
+    assert(viewCommandsDuring(other)(Tables.view(other, dir, "nation")) == 1)
+    assert(nationKeys(other) == Seq(4L))
+    assert(viewCommandsDuring(other)(Tables.view(other, dir, "nation")) == 0)
+    assert(viewCommandsDuring(spark)(Tables.view(spark, dir, "nation")) == 0)
+  }
+
+  test("building sql_tpch_q21 after sql_tpch_q5 in a fresh session submits no job") {
+    // only the TPC-H views register, so no events read flips nanosAsLong
+    // between the two builds and re-stamps every root
+    val fresh = spark.newSession()
+    val q = graft.sql.SqlQueries.queries
+    q("sql_tpch_q5")(fresh, SparkSpec.sfDir)
+    assert(jobsDuring(q("sql_tpch_q21")(fresh, SparkSpec.sfDir)) == 0)
   }
 }

@@ -4,12 +4,18 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
     // dev-only third arg: comma-separated query names to dump (the
     // driver always calls with two args → full inventory, unchanged)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').toSet) else None
+    val only = args.lift(2).map(_.split(',').toSet)
     val spark = graft.config.Sessions.local()
+    dump(spark, args(0), args(1), only)
+    spark.stop()
+  }
+
+  /** Dump each query (or the `only` ones) over `sfDir` to
+    * `outDir/<name>`, plus `outDir/oracle_sql.json`. */
+  def dump(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+           outDir: String, only: Option[Set[String]] = None): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -35,6 +41,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -1,12 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
 /** 0-row fixture generator (dev tool, not part of the query surface):
   * copies a driver-generated sf world with the chosen tables emptied
   * (`limit 0` — schema-exact, content-free). Two deployment shapes:
   *
-  *  - `all`   — every table 0 rows (the cold-start world);
+  *  - `empty` — every table 0 rows (the cold-start world);
   *  - `facts` — dims populated, fact/pipeline tables empty (the
   *    backfill-before-go-live world: joins see a real build side
   *    against an empty probe side).
@@ -16,30 +16,14 @@ import org.apache.spark.sql.SparkSession
   * can prove the oracled queries keep MATCHING DuckDB on them —
   * empty-input differentials catch scalar-aggregate and
   * count-vs-count(col) divergences that a does-it-crash sweep cannot.
-  *
-  * Usage: runMain graft.tools.EmptyWorld <srcSfDir> <dstDir> [all|facts]
+  * Written as worlds `empty` and `facts` by [[Worlds]].
   */
 object EmptyWorld {
 
   val factTables: Set[String] =
     Set("orders", "lineitem", "events", "documents", "embeddings")
 
-  def write(spark: SparkSession, src: String, dst: String,
-            emptied: Set[String]): Unit =
-    NullWorld.tables.foreach { t =>
-      val df = spark.read.parquet(s"$src/$t.parquet")
-      (if (emptied(t)) df.limit(0) else df)
-        .write.mode("overwrite").parquet(s"$dst/$t.parquet")
-    }
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.config.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val emptied = args.lift(2).getOrElse("all") match {
-      case "facts" => factTables
-      case _       => NullWorld.tables.toSet
-    }
-    write(spark, args(0), args(1), emptied)
-    spark.stop()
-  }
+  /** Empties the `emptied` tables and passes the rest through. */
+  def emptying(emptied: Set[String])(t: String, df: DataFrame): DataFrame =
+    if (emptied(t)) df.limit(0) else df
 }

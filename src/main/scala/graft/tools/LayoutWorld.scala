@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Input-layout permutation generator (dev tool, not part of the query
@@ -28,8 +28,7 @@ import org.apache.spark.sql.functions._
   * has one), salted, so the permutation is deterministic and
   * regenerable; repartition(7) by the same hash redistributes rows
   * across files with no correlation to the original row groups.
-  *
-  * Usage: runMain graft.tools.LayoutWorld <srcSfDir> <dstDir>
+  * Written as world `layout` by [[Worlds]].
   */
 object LayoutWorld {
 
@@ -44,22 +43,11 @@ object LayoutWorld {
     "events" -> Seq("event_id"),
     "documents" -> Seq("doc_id"), "embeddings" -> Seq("vec_id"))
 
-  def write(spark: SparkSession, src: String, dst: String): Unit =
-    NullWorld.tables.foreach { t =>
-      val df = spark.read.parquet(s"$src/$t.parquet")
-      val scramble = xxhash64(keyCols(t).map(col) :+ lit(211): _*)
-      // repartition spreads rows across 7 files keyed by the hash;
-      // sortWithinPartitions pins a deterministic (but scrambled)
-      // in-file order so the world itself is regenerable bit-for-bit
-      df.repartition(7, scramble)
-        .sortWithinPartitions(scramble)
-        .write.mode("overwrite").parquet(s"$dst/$t.parquet")
-    }
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.config.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    write(spark, args(0), args(1))
-    spark.stop()
+  def plant(t: String, df: DataFrame): DataFrame = {
+    val scramble = xxhash64(keyCols(t).map(col) :+ lit(211): _*)
+    // repartition spreads rows across 7 files keyed by the hash;
+    // sortWithinPartitions pins a deterministic (but scrambled)
+    // in-file order so the world itself is regenerable bit-for-bit
+    df.repartition(7, scramble).sortWithinPartitions(scramble)
   }
 }

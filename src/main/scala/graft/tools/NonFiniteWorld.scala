@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Non-finite-embedding fixture generator (dev tool, not part of the
@@ -26,34 +26,21 @@ import org.apache.spark.sql.functions._
   * Pure column arithmetic: same rows every run, and the poisoned
   * values are WRITTEN to the world's parquet, which both engines then
   * read — the differential is pure, nothing to mirror in the plant.
-  *
-  * Usage: runMain graft.tools.NonFiniteWorld <srcSfDir> <dstDir>
+  * Written as world `nonfinite` by [[Worlds]].
   */
 object NonFiniteWorld {
 
-  def write(spark: SparkSession, src: String, dst: String): Unit =
-    NullWorld.tables.foreach { t =>
-      val df = spark.read.parquet(s"$src/$t.parquet")
-      val out = t match {
-        case "embeddings" =>
-          val v = pmod(xxhash64(col("vec_id"), lit(13)), lit(16))
-          val tgt = pmod(col("vec_id"), lit(64)).cast("int")
-          def poison(bad: Float) = transform(col("embedding"),
-            (x, i) => when(i === tgt, lit(bad)).otherwise(x))
-          df.withColumn("embedding",
-            when(v === 0, poison(Float.NaN))
-              .when(v === 1, poison(Float.PositiveInfinity))
-              .when(v === 2, poison(Float.NegativeInfinity))
-              .otherwise(col("embedding")))
-        case _ => df
-      }
-      out.write.mode("overwrite").parquet(s"$dst/$t.parquet")
-    }
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.config.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    write(spark, args(0), args(1))
-    spark.stop()
+  def plant(t: String, df: DataFrame): DataFrame = t match {
+    case "embeddings" =>
+      val v = pmod(xxhash64(col("vec_id"), lit(13)), lit(16))
+      val tgt = pmod(col("vec_id"), lit(64)).cast("int")
+      def poison(bad: Float) = transform(col("embedding"),
+        (x, i) => when(i === tgt, lit(bad)).otherwise(x))
+      df.withColumn("embedding",
+        when(v === 0, poison(Float.NaN))
+          .when(v === 1, poison(Float.PositiveInfinity))
+          .when(v === 2, poison(Float.NegativeInfinity))
+          .otherwise(col("embedding")))
+    case _ => df
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Null-payload fixture generator (dev tool, not part of the query
@@ -18,15 +18,10 @@ import org.apache.spark.sql.functions._
   * Shared by NullInputSpec (completion sweep on a tiny world) and the
   * null-world oracle differential (`Verify` + `tools/check.py
   * --unordered` on this output — proves the 210 oracled queries keep
-  * MATCHING DuckDB under nulls, not merely surviving them).
-  *
-  * Usage: runMain graft.tools.NullWorld <srcSfDir> <dstDir>
+  * MATCHING DuckDB under nulls, not merely surviving them). Written as
+  * world `null` by [[Worlds]].
   */
 object NullWorld {
-
-  val tables: Seq[String] = Seq("region", "nation", "customer",
-    "supplier", "part", "orders", "lineitem", "events", "documents",
-    "embeddings")
 
   /** The per-table null plan: id column + value columns to nullify. */
   val plan: Map[String, (String, Seq[String])] = Map(
@@ -36,28 +31,12 @@ object NullWorld {
 
   /** Nulls planted where pmod(xxhash64(id, colIndex), 8) == 0 — pure
     * column arithmetic, same rows on every run and every engine. */
-  def nullify(df: DataFrame, idCol: String, cols: Seq[String]): DataFrame =
-    cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-      d.withColumn(c,
-        when(pmod(xxhash64(col(idCol), lit(i)), lit(8)) === 0, lit(null))
-          .otherwise(col(c)))
-    }
-
-  /** Write the null-planted copy of every fixture table under `dst`. */
-  def write(spark: SparkSession, src: String, dst: String): Unit =
-    tables.foreach { t =>
-      val df = spark.read.parquet(s"$src/$t.parquet")
-      val out = plan.get(t) match {
-        case Some((id, cols)) => nullify(df, id, cols)
-        case None             => df
+  def plant(t: String, df: DataFrame): DataFrame =
+    plan.get(t).fold(df) { case (id, cols) =>
+      cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
+        d.withColumn(c,
+          when(Worlds.planted(8)(col(id), lit(i)), lit(null))
+            .otherwise(col(c)))
       }
-      out.write.mode("overwrite").parquet(s"$dst/$t.parquet")
     }
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.config.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    write(spark, args(0), args(1))
-    spark.stop()
-  }
 }

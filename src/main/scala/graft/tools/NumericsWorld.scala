@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Worlds.planted
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Extreme-numerics fixture generator (dev tool, not part of the query
@@ -42,73 +43,57 @@ import org.apache.spark.sql.functions._
   * salts are independent, so the shortfall is ~the product of the
   * earlier rates). Deliberate: disjoint residue bands would couple
   * the plants to one shared salt, and the differential only needs
-  * every boundary value PRESENT, not at an exact census.
-  *
-  * Usage: runMain graft.tools.NumericsWorld <srcSfDir> <dstDir>
+  * every boundary value PRESENT, not at an exact census. Written as
+  * world `numerics` by [[Worlds]].
   */
 object NumericsWorld {
 
-  private def planted(id: org.apache.spark.sql.Column, salt: Int, oneIn: Int) =
-    pmod(xxhash64(id, lit(salt)), lit(oneIn)) === 0
-
-  def write(spark: SparkSession, src: String, dst: String): Unit =
-    NullWorld.tables.foreach { t =>
-      val df = spark.read.parquet(s"$src/$t.parquet")
-      val out = t match {
-        case "events" =>
-          df.withColumn("value",
-            when(planted(col("event_id"), 300, 8), -col("value"))
-              .when(planted(col("event_id"), 301, 16), lit(0.0))
-              .when(planted(col("event_id"), 302, 16),
-                floor(col("value")) + lit(0.125))
-              .when(planted(col("event_id"), 303, 32), col("value") * 1e6)
-              .otherwise(col("value")))
-        case "orders" =>
-          df.withColumn("o_totalprice",
-              when(planted(col("o_orderkey"), 304, 16), -col("o_totalprice"))
-                .otherwise(col("o_totalprice")))
-            .withColumn("o_orderdate",
-              when(planted(col("o_orderkey"), 305, 32),
-                to_timestamp(lit("1970-01-01 00:00:00"))
-                  .cast(df.schema("o_orderdate").dataType))
-                .otherwise(col("o_orderdate")))
-        case "lineitem" =>
-          val rowId = xxhash64(col("l_orderkey"), col("l_linenumber"))
-          df.withColumn("l_discount",
-              when(pmod(xxhash64(rowId, lit(306)), lit(16)) === 0, lit(1.0))
-                .when(pmod(xxhash64(rowId, lit(307)), lit(16)) === 0, lit(0.0))
-                .otherwise(col("l_discount")))
-            .withColumn("l_quantity",
-              when(pmod(xxhash64(rowId, lit(308)), lit(16)) === 0, lit(0.0))
-                .otherwise(col("l_quantity")))
-            .withColumn("l_shipdate",
-              when(pmod(xxhash64(rowId, lit(309)), lit(32)) === 0,
-                to_timestamp(lit("1970-01-01 00:00:00"))
-                  .cast(df.schema("l_shipdate").dataType))
-                .otherwise(col("l_shipdate")))
-        case "embeddings" =>
-          df.withColumn("embedding",
-            when(planted(col("vec_id"), 310, 16),
-              transform(col("embedding"), _ => lit(0.0f)))
-              .otherwise(col("embedding")))
-        case "documents" =>
-          df.withColumn("n_chars",
-            when(planted(col("doc_id"), 311, 16), lit(0L))
-              .otherwise(col("n_chars")))
-        // orphan plant folded into this axis too (round 15) — the
-        // boundary-value world now also exercises anti-join survivors
-        // (and q22's avg threshold meets the planted balances under a
-        // population containing negated credit memos)
-        case "customer" => OrphanWorld.plantInto(df)
-        case _ => df
-      }
-      out.write.mode("overwrite").parquet(s"$dst/$t.parquet")
-    }
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.config.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    write(spark, args(0), args(1))
-    spark.stop()
+  def plant(t: String, df: DataFrame): DataFrame = t match {
+    case "events" =>
+      val id = col("event_id")
+      df.withColumn("value",
+        when(planted(8)(id, lit(300)), -col("value"))
+          .when(planted(16)(id, lit(301)), lit(0.0))
+          .when(planted(16)(id, lit(302)), floor(col("value")) + lit(0.125))
+          .when(planted(32)(id, lit(303)), col("value") * 1e6)
+          .otherwise(col("value")))
+    case "orders" =>
+      df.withColumn("o_totalprice",
+          when(planted(16)(col("o_orderkey"), lit(304)), -col("o_totalprice"))
+            .otherwise(col("o_totalprice")))
+        .withColumn("o_orderdate",
+          when(planted(32)(col("o_orderkey"), lit(305)),
+            to_timestamp(lit("1970-01-01 00:00:00"))
+              .cast(df.schema("o_orderdate").dataType))
+            .otherwise(col("o_orderdate")))
+    case "lineitem" =>
+      val rowId = xxhash64(col("l_orderkey"), col("l_linenumber"))
+      df.withColumn("l_discount",
+          when(planted(16)(rowId, lit(306)), lit(1.0))
+            .when(planted(16)(rowId, lit(307)), lit(0.0))
+            .otherwise(col("l_discount")))
+        .withColumn("l_quantity",
+          when(planted(16)(rowId, lit(308)), lit(0.0))
+            .otherwise(col("l_quantity")))
+        .withColumn("l_shipdate",
+          when(planted(32)(rowId, lit(309)),
+            to_timestamp(lit("1970-01-01 00:00:00"))
+              .cast(df.schema("l_shipdate").dataType))
+            .otherwise(col("l_shipdate")))
+    case "embeddings" =>
+      df.withColumn("embedding",
+        when(planted(16)(col("vec_id"), lit(310)),
+          transform(col("embedding"), _ => lit(0.0f)))
+          .otherwise(col("embedding")))
+    case "documents" =>
+      df.withColumn("n_chars",
+        when(planted(16)(col("doc_id"), lit(311)), lit(0L))
+          .otherwise(col("n_chars")))
+    // orphan plant folded into this axis too (round 15) — the
+    // boundary-value world now also exercises anti-join survivors
+    // (and q22's avg threshold meets the planted balances under a
+    // population containing negated credit memos)
+    case "customer" => OrphanWorld.plantInto(df)
+    case _ => df
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Orphan-key fixture generator (dev tool, not part of the query
   * surface): the tenth adversarial axis — referential ORPHANS. The
@@ -29,8 +29,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * Covered by the full oracle differential in gate.sh --worlds (any
   * query touching customer sees the orphans) and by OrphanInputSpec,
   * which pins the exact planted keys both queries must surface.
-  *
-  * Usage: runMain graft.tools.OrphanWorld <srcSfDir> <dstDir>
+  * Written as world `orphan` by [[Worlds]].
   */
 object OrphanWorld {
 
@@ -78,21 +77,6 @@ object OrphanWorld {
     customer.unionByName(planted)
   }
 
-  def write(spark: SparkSession, src: String, dst: String): Unit = {
-    NullWorld.tables.foreach { t =>
-      val df = spark.read.parquet(s"$src/$t.parquet")
-      val out = t match {
-        case "customer" => plantInto(df)
-        case _ => df
-      }
-      out.write.mode("overwrite").parquet(s"$dst/$t.parquet")
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.config.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    write(spark, args(0), args(1))
-    spark.stop()
-  }
+  def plant(t: String, df: DataFrame): DataFrame =
+    if (t == "customer") plantInto(df) else df
 }

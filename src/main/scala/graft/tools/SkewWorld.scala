@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.tools.Worlds.planted
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -37,8 +38,7 @@ import org.apache.spark.sql.functions._
   * the DuckDB differential runs on the identical world: the oracles
   * mirror the df-cap, which means correctness-under-cap is CHECKED
   * where the cap actually bites, not just where it is a no-op.
-  *
-  * Usage: runMain graft.tools.SkewWorld <srcSfDir> <dstDir>
+  * Written as world `skew` by [[Worlds]].
   */
 object SkewWorld {
 
@@ -51,46 +51,34 @@ object SkewWorld {
      "or availability please consult the official source before " +
      "acting on the contents hereof thank you")
 
-  def write(spark: SparkSession, src: String, dst: String): Unit = {
+  def plant(spark: SparkSession, src: String): Worlds.Plant = {
     // hot join keys must be EXISTING keys so every FK stays valid
     val hotOrderKey = spark.read.parquet(s"$src/orders.parquet")
       .agg(min(col("o_orderkey"))).head().getLong(0)
     val hotCustKey = spark.read.parquet(s"$src/customer.parquet")
       .agg(min(col("c_custkey"))).head().getLong(0)
-    NullWorld.tables.foreach { t =>
-      val df = spark.read.parquet(s"$src/$t.parquet")
-      val out = t match {
-        case "documents" =>
-          df.withColumn("text",
-            when(pmod(xxhash64(col("doc_id")), lit(3)) === 0,
-              concat(col("text"), lit(" " + boilerplate)))
-              .otherwise(col("text")))
-        case "events" =>
-          df.withColumn("user_id",
-            when(pmod(xxhash64(col("event_id")), lit(5)) === 0, lit(1L))
-              .otherwise(col("user_id")))
-        case "lineitem" =>
-          // the selector hashes the composite row identity, not just
-          // the orderkey, so ~20% of ROWS (not of orderkeys) move
-          df.withColumn("l_orderkey",
-            when(pmod(xxhash64(col("l_orderkey"), col("l_linenumber")),
-                      lit(5)) === 0, lit(hotOrderKey))
-              .otherwise(col("l_orderkey")))
-        case "orders" =>
-          df.withColumn("o_custkey",
-            when(pmod(xxhash64(col("o_orderkey")), lit(5)) === 0,
-              lit(hotCustKey))
-              .otherwise(col("o_custkey")))
-        case _ => df
-      }
-      out.write.mode("overwrite").parquet(s"$dst/$t.parquet")
+    (t, df) => t match {
+      case "documents" =>
+        df.withColumn("text",
+          when(planted(3)(col("doc_id")),
+            concat(col("text"), lit(" " + boilerplate)))
+            .otherwise(col("text")))
+      case "events" =>
+        df.withColumn("user_id",
+          when(planted(5)(col("event_id")), lit(1L))
+            .otherwise(col("user_id")))
+      case "lineitem" =>
+        // the selector hashes the composite row identity, not just
+        // the orderkey, so ~20% of ROWS (not of orderkeys) move
+        df.withColumn("l_orderkey",
+          when(planted(5)(col("l_orderkey"), col("l_linenumber")),
+            lit(hotOrderKey))
+            .otherwise(col("l_orderkey")))
+      case "orders" =>
+        df.withColumn("o_custkey",
+          when(planted(5)(col("o_orderkey")), lit(hotCustKey))
+            .otherwise(col("o_custkey")))
+      case _ => df
     }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.config.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    write(spark, args(0), args(1))
-    spark.stop()
   }
 }

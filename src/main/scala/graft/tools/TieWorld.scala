@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import graft.tools.Worlds.planted
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Tie/duplicate fixture generator (dev tool, not part of the query
@@ -44,9 +45,7 @@ import org.apache.spark.sql.functions._
   * Ids and join keys stay untouched (unique); only payload/value
   * columns tie. All grid snaps go through round() to integral
   * multiples, so the planted doubles are exactly representable and
-  * byte-stable through parquet.
-  *
-  * Usage: runMain graft.tools.TieWorld <srcSfDir> <dstDir>
+  * byte-stable through parquet. Written as world `tie` by [[Worlds]].
   */
 object TieWorld {
 
@@ -64,91 +63,76 @@ object TieWorld {
     Seq.tabulate(64)(i => (((k * 31 + i * 7) % 11) - 5) / 8.0f)
   }
 
-  private def planted(id: Column, salt: Int, oneIn: Int): Column =
-    pmod(xxhash64(id, lit(salt)), lit(oneIn)) === 0
-
   /** Snap a double to the `grid`-multiple lattice (exact doubles). */
   private def snap(c: Column, grid: Double): Column =
     round(c / grid) * grid
 
-  def write(spark: SparkSession, src: String, dst: String): Unit =
-    NullWorld.tables.foreach { t =>
-      val df = spark.read.parquet(s"$src/$t.parquet")
-      val out = t match {
-        case "documents" =>
-          val k = pmod(xxhash64(col("doc_id"), lit(101)), lit(32))
-          val pool = textPool.zipWithIndex.foldLeft(lit(textPool.head)) {
-            case (acc, (s, i)) => when(k === i, lit(s)).otherwise(acc)
-          }
-          df.withColumn("text",
-            when(planted(col("doc_id"), 100, 4), pool).otherwise(col("text")))
-        case "embeddings" =>
-          val k = pmod(xxhash64(col("vec_id"), lit(103)), lit(16))
-          val pool = vecPool.zipWithIndex.foldLeft(
-            array(vecPool.head.map(lit): _*)) { case (acc, (v, i)) =>
-            when(k === i, array(v.map(lit): _*)).otherwise(acc)
-          }
-          df.withColumn("embedding",
-            when(planted(col("vec_id"), 102, 4), pool.cast("array<float>"))
-              .otherwise(col("embedding")))
-        case "events" =>
-          // ts ships in two parquet flavors (see graft.io.Tables.events):
-          // raw-nanos LongType truncates arithmetically, timestamps via
-          // date_trunc — both land on the same hour boundary
-          val hourTrunc =
-            if (df.schema("ts").dataType ==
-                  org.apache.spark.sql.types.LongType)
-              col("ts") - pmod(col("ts"), lit(3600L * 1000000000L))
-            else date_trunc("hour", col("ts")).cast(df.schema("ts").dataType)
-          df.withColumn("ts",
-              when(planted(col("event_id"), 104, 2), hourTrunc)
-                .otherwise(col("ts")))
-            .withColumn("value",
-              when(planted(col("event_id"), 105, 4), round(col("value")))
-                .otherwise(col("value")))
-        case "orders" =>
-          df.withColumn("o_totalprice",
-              when(planted(col("o_orderkey"), 106, 4),
-                snap(col("o_totalprice"), 100d)).otherwise(col("o_totalprice")))
-            .withColumn("o_orderdate",
-              when(planted(col("o_orderkey"), 107, 4),
-                date_trunc("month", col("o_orderdate"))
-                  .cast(df.schema("o_orderdate").dataType))
-                .otherwise(col("o_orderdate")))
-        case "lineitem" =>
-          val rowId = xxhash64(col("l_orderkey"), col("l_linenumber"))
-          df.withColumn("l_extendedprice",
-              when(pmod(xxhash64(rowId, lit(108)), lit(4)) === 0,
-                snap(col("l_extendedprice"), 10d))
-                .otherwise(col("l_extendedprice")))
-            .withColumn("l_shipdate",
-              when(pmod(xxhash64(rowId, lit(109)), lit(4)) === 0,
-                date_trunc("month", col("l_shipdate"))
-                  .cast(df.schema("l_shipdate").dataType))
-                .otherwise(col("l_shipdate")))
-        case "part" =>
-          df.withColumn("p_retailprice",
-            when(planted(col("p_partkey"), 110, 4),
-              snap(col("p_retailprice"), 1d)).otherwise(col("p_retailprice")))
-        case "customer" =>
-          // tie-grid snap first, then the orphan plant (round 15) —
-          // planted AFTER the transform so the orphan attributes stay
-          // exactly the values OrphanInputSpec pins (and the q22
-          // avg-acctbal threshold sees both the snapped population
-          // and the planted survivors)
-          OrphanWorld.plantInto(
-            df.withColumn("c_acctbal",
-              when(planted(col("c_custkey"), 111, 4),
-                snap(col("c_acctbal"), 10d)).otherwise(col("c_acctbal"))))
-        case _ => df
+  def plant(t: String, df: DataFrame): DataFrame = t match {
+    case "documents" =>
+      val k = pmod(xxhash64(col("doc_id"), lit(101)), lit(32))
+      val pool = textPool.zipWithIndex.foldLeft(lit(textPool.head)) {
+        case (acc, (s, i)) => when(k === i, lit(s)).otherwise(acc)
       }
-      out.write.mode("overwrite").parquet(s"$dst/$t.parquet")
-    }
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.config.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    write(spark, args(0), args(1))
-    spark.stop()
+      df.withColumn("text",
+        when(planted(4)(col("doc_id"), lit(100)), pool).otherwise(col("text")))
+    case "embeddings" =>
+      val k = pmod(xxhash64(col("vec_id"), lit(103)), lit(16))
+      val pool = vecPool.zipWithIndex.foldLeft(
+        array(vecPool.head.map(lit): _*)) { case (acc, (v, i)) =>
+        when(k === i, array(v.map(lit): _*)).otherwise(acc)
+      }
+      df.withColumn("embedding",
+        when(planted(4)(col("vec_id"), lit(102)), pool.cast("array<float>"))
+          .otherwise(col("embedding")))
+    case "events" =>
+      // ts ships in two parquet flavors (see graft.io.Tables.events):
+      // raw-nanos LongType truncates arithmetically, timestamps via
+      // date_trunc — both land on the same hour boundary
+      val hourTrunc =
+        if (df.schema("ts").dataType ==
+              org.apache.spark.sql.types.LongType)
+          col("ts") - pmod(col("ts"), lit(3600L * 1000000000L))
+        else date_trunc("hour", col("ts")).cast(df.schema("ts").dataType)
+      df.withColumn("ts",
+          when(planted(2)(col("event_id"), lit(104)), hourTrunc)
+            .otherwise(col("ts")))
+        .withColumn("value",
+          when(planted(4)(col("event_id"), lit(105)), round(col("value")))
+            .otherwise(col("value")))
+    case "orders" =>
+      df.withColumn("o_totalprice",
+          when(planted(4)(col("o_orderkey"), lit(106)),
+            snap(col("o_totalprice"), 100d)).otherwise(col("o_totalprice")))
+        .withColumn("o_orderdate",
+          when(planted(4)(col("o_orderkey"), lit(107)),
+            date_trunc("month", col("o_orderdate"))
+              .cast(df.schema("o_orderdate").dataType))
+            .otherwise(col("o_orderdate")))
+    case "lineitem" =>
+      val rowId = xxhash64(col("l_orderkey"), col("l_linenumber"))
+      df.withColumn("l_extendedprice",
+          when(planted(4)(rowId, lit(108)),
+            snap(col("l_extendedprice"), 10d))
+            .otherwise(col("l_extendedprice")))
+        .withColumn("l_shipdate",
+          when(planted(4)(rowId, lit(109)),
+            date_trunc("month", col("l_shipdate"))
+              .cast(df.schema("l_shipdate").dataType))
+            .otherwise(col("l_shipdate")))
+    case "part" =>
+      df.withColumn("p_retailprice",
+        when(planted(4)(col("p_partkey"), lit(110)),
+          snap(col("p_retailprice"), 1d)).otherwise(col("p_retailprice")))
+    case "customer" =>
+      // tie-grid snap first, then the orphan plant (round 15) —
+      // planted AFTER the transform so the orphan attributes stay
+      // exactly the values OrphanInputSpec pins (and the q22
+      // avg-acctbal threshold sees both the snapped population
+      // and the planted survivors)
+      OrphanWorld.plantInto(
+        df.withColumn("c_acctbal",
+          when(planted(4)(col("c_custkey"), lit(111)),
+            snap(col("c_acctbal"), 10d)).otherwise(col("c_acctbal"))))
+    case _ => df
   }
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Worlds.planted
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pathological-text fixture generator (dev tool, not part of the
@@ -46,9 +47,7 @@ import org.apache.spark.sql.functions._
   *
   * Shared by UnicodeInputSpec (targeted text-family pins on a tiny
   * world) and the unicode-world oracle differential in
-  * `tools/gate.sh --worlds`.
-  *
-  * Usage: runMain graft.tools.UnicodeWorld <srcSfDir> <dstDir>
+  * `tools/gate.sh --worlds`. Written as world `unicode` by [[Worlds]].
   */
 object UnicodeWorld {
 
@@ -77,41 +76,29 @@ object UnicodeWorld {
   /** Non-ASCII value planted into the `source` group key. */
   val unicodeSource: String = "wêb—crawl🌐"
 
-  def write(spark: SparkSession, src: String, dst: String): Unit =
-    NullWorld.tables.foreach { t =>
-      val df = spark.read.parquet(s"$src/$t.parquet")
-      val out = t match {
-        case "documents" =>
-          // 3 in 8 docs modified: variants 0-5 append (text stays
-          // mostly realistic), 6-8 REPLACE with degenerate shapes.
-          val v = pmod(xxhash64(col("doc_id"), lit(42)), lit(24))
-          val appended = appendix.zipWithIndex.foldLeft(
-            when(v === 6, lit(longToken))
-              .when(v === 7, lit(""))
-              .when(v === 8, lit(whitespaceOnly))) {
-            case (acc, (payload, i)) =>
-              acc.when(v === i, concat(col("text"), lit(payload)))
-          }
-          df.withColumn("text", coalesce(appended, col("text")))
-            .withColumn("source",
-              when(pmod(xxhash64(col("doc_id"), lit(7)), lit(16)) === 0,
-                lit(unicodeSource)).otherwise(col("source")))
-            .withColumn("lang",
-              when(pmod(xxhash64(col("doc_id"), lit(9)), lit(16)) === 0,
-                lit("中文")).otherwise(col("lang")))
-        // orphan plant folded into this axis too (round 15) — the
-        // saturated base fixture otherwise keeps join_anti /
-        // sql_tpch_q22 vacuous in every world but the dedicated one
-        case "customer" => OrphanWorld.plantInto(df)
-        case _ => df
+  def plant(t: String, df: DataFrame): DataFrame = t match {
+    case "documents" =>
+      // 3 in 8 docs modified: variants 0-5 append (text stays
+      // mostly realistic), 6-8 REPLACE with degenerate shapes.
+      val v = pmod(xxhash64(col("doc_id"), lit(42)), lit(24))
+      val appended = appendix.zipWithIndex.foldLeft(
+        when(v === 6, lit(longToken))
+          .when(v === 7, lit(""))
+          .when(v === 8, lit(whitespaceOnly))) {
+        case (acc, (payload, i)) =>
+          acc.when(v === i, concat(col("text"), lit(payload)))
       }
-      out.write.mode("overwrite").parquet(s"$dst/$t.parquet")
-    }
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.config.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    write(spark, args(0), args(1))
-    spark.stop()
+      df.withColumn("text", coalesce(appended, col("text")))
+        .withColumn("source",
+          when(planted(16)(col("doc_id"), lit(7)), lit(unicodeSource))
+            .otherwise(col("source")))
+        .withColumn("lang",
+          when(planted(16)(col("doc_id"), lit(9)), lit("中文"))
+            .otherwise(col("lang")))
+    // orphan plant folded into this axis too (round 15) — the
+    // saturated base fixture otherwise keeps join_anti /
+    // sql_tpch_q22 vacuous in every world but the dedicated one
+    case "customer" => OrphanWorld.plantInto(df)
+    case _ => df
   }
 }

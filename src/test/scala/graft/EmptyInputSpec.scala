@@ -18,46 +18,22 @@ import org.scalatest.funsuite.AnyFunSuite
   *     over no rows (embed_pca's "empty collection");
   *   - any future `.head()`/Encoder assumption a new query sneaks in.
   *
-  * The empty fixture is built once per suite from the real fixture's
-  * schemas (limit 0 — schema-exact, content-free). Queries only —
-  * row counts are NOT asserted (a scalar aggregate legitimately
-  * returns 1 row on empty input; a grouped one returns 0).
+  * The empty fixtures are graft.tools.EmptyWorld's `empty` and `facts`
+  * worlds over the real fixture (limit 0 — schema-exact,
+  * content-free). Queries only — row counts are NOT asserted (a scalar
+  * aggregate legitimately returns 1 row on empty input; a grouped one
+  * returns 0).
   */
 class EmptyInputSpec extends AnyFunSuite {
   lazy val spark = SparkSpec.session
 
-  private val allTables = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** A fixture copy with `emptied` tables at 0 rows (schema-exact) and
-    * the rest as-is (symlink-free real copies via read+write). */
-  private def world(tag: String, emptied: Set[String]): String = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft_empty_$tag")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(root.toFile)
-    }))
-    allTables.foreach { t =>
-      val df = spark.read.parquet(s"${SparkSpec.sfDir}/$t.parquet")
-      (if (emptied(t)) df.limit(0) else df)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$root/$t.parquet")
-    }
-    root.toString
-  }
-
-  private lazy val emptyDir: String = world("all", allTables.toSet)
+  private lazy val emptyDir: String = SparkSpec.world("empty")
 
   /** Dims populated, facts empty — the backfill-before-go-live world.
     * A DIFFERENT failure class from all-empty: joins see a non-empty
     * build side against an empty stream side, and per-dim aggregates
     * produce rows whose fact-derived columns are NULL. */
-  private lazy val factsEmptyDir: String =
-    world("facts", Set("orders", "lineitem", "events", "documents",
-                       "embeddings"))
+  private lazy val factsEmptyDir: String = SparkSpec.world("facts")
 
   test("all queries complete on an all-empty fixture (no driver exceptions)") {
     // the sweep must cover the FULL declared inventory — a query

@@ -19,18 +19,7 @@ import org.apache.spark.sql.functions._
 class NonFiniteInputSpec extends AnyFunSuite {
   lazy val spark = SparkSpec.session
 
-  private lazy val nfDir: String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_nfworld")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(root.toFile)
-    }))
-    graft.tools.NonFiniteWorld.write(spark, SparkSpec.sfDir, root.toString)
-    root.toString
-  }
+  private lazy val nfDir: String = SparkSpec.world("nonfinite")
 
   /** vec_ids whose embedding has a non-finite component, recomputed
     * from the world itself (the front door's own predicate, negated). */

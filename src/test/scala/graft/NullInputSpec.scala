@@ -39,18 +39,7 @@ class NullInputSpec extends AnyFunSuite {
     * columns — injection lives in graft.tools.NullWorld (shared with
     * the null-world oracle differential; see its scaladoc for the
     * residue design). */
-  private lazy val nullDir: String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_nullworld")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(root.toFile)
-    }))
-    graft.tools.NullWorld.write(spark, SparkSpec.sfDir, root.toString)
-    root.toString
-  }
+  private lazy val nullDir: String = SparkSpec.world("null")
 
   test("all queries complete on the null-planted world (no driver exceptions)") {
     // live-enumerated against the declared inventory, like EmptyInputSpec

@@ -20,18 +20,7 @@ import org.apache.spark.sql.functions._
 class NumericsInputSpec extends AnyFunSuite {
   lazy val spark = SparkSpec.session
 
-  private lazy val numDir: String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_numworld")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(root.toFile)
-    }))
-    graft.tools.NumericsWorld.write(spark, SparkSpec.sfDir, root.toString)
-    root.toString
-  }
+  private lazy val numDir: String = SparkSpec.world("numerics")
 
   /** vec_ids zeroed by the world (the front door's predicate, negated). */
   private lazy val zeroed: Set[Long] = {

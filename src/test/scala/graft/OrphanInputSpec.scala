@@ -16,12 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class OrphanInputSpec extends AnyFunSuite {
   lazy val spark = SparkSpec.session
 
-  private lazy val dir: String = {
-    val d = java.nio.file.Files
-      .createTempDirectory("graft_orphanworld").toString
-    graft.tools.OrphanWorld.write(spark, SparkSpec.sfDir, d)
-    d
-  }
+  private lazy val dir: String = SparkSpec.world("orphan")
 
   private lazy val maxKey: Long = {
     import org.apache.spark.sql.functions._

@@ -12,18 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SkewWorldSpec extends AnyFunSuite {
   lazy val spark = SparkSpec.session
 
-  private lazy val dir: String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_skewworld")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(root.toFile)
-    }))
-    graft.tools.SkewWorld.write(spark, SparkSpec.sfDir, root.toString)
-    root.toString
-  }
+  private lazy val dir: String = SparkSpec.world("skew")
 
   private def top(table: String, key: String): (Long, Long, Long) = {
     val df = spark.read.parquet(s"$dir/$table.parquet")

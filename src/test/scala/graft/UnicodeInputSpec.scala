@@ -24,18 +24,7 @@ class UnicodeInputSpec extends AnyFunSuite {
   /** Tiny world with the pathological plants — injection lives in
     * graft.tools.UnicodeWorld (shared with the unicode-world oracle
     * differential; see its scaladoc for the payload design). */
-  private lazy val uniDir: String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_uniworld")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(root.toFile)
-    }))
-    graft.tools.UnicodeWorld.write(spark, SparkSpec.sfDir, root.toString)
-    root.toString
-  }
+  private lazy val uniDir: String = SparkSpec.world("unicode")
 
   /** One-doc world for exact-value pins (full documents schema). */
   private def oneDocWorld(text: String): String = {

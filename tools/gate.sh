@@ -9,14 +9,16 @@
 #                                 # all-empty, facts-empty,
 #                                 # pathological-unicode-text,
 #                                 # non-finite-embedding,
-#                                 # exact-tie/duplicate, and
-#                                 # extreme-numerics fixtures
-#                                 # @ sf0.01 -> Verify -> check.py
-#                                 # --unordered (unordered because the
-#                                 # engines disagree on default null
-#                                 # placement under ORDER BY; value
-#                                 # equality is what the differential
-#                                 # proves). --null = same (legacy alias).
+#                                 # exact-tie/duplicate, extreme-numerics,
+#                                 # orphan-key and skew fixtures
+#                                 # -> Verify -> check.py --unordered
+#                                 # (unordered because the engines
+#                                 # disagree on default null placement
+#                                 # under ORDER BY; value equality is
+#                                 # what the differential proves), plus
+#                                 # the layout-invariance sweep; every
+#                                 # world is written and dumped by one
+#                                 # graft.tools.Worlds JVM per scale.
 #
 # A round must never end on a commit that hasn't passed this script
 # (round 2 shipped a non-compiling HEAD; this is the fix for the
@@ -58,39 +60,38 @@ python3 tools/check.py /root/testdata/sf0.01 /tmp/gate_vout | tail -3
 python3 tools/check.py /root/testdata/sf0.01 /tmp/gate_vout | tail -1 | grep -q " 0 fail" \
   || { echo "GATE FAIL: oracle mismatch"; exit 1; }
 
-if [[ "$FAST" == "--null" || "$FAST" == "--worlds" ]]; then
-  run_world() {  # <label> <src sf dir> <gen main> [gen mode arg]
-    local label=$1 sf=$2 main=$3 mode=${4:-}
-    echo "== gate: $label-world differential @ $(basename "$sf") =="
-    sbt -batch "runMain $main $sf /tmp/gate_${label}world $mode" \
-      > "/tmp/gate_${label}gen.log" 2>&1 \
-      || { tail -30 "/tmp/gate_${label}gen.log"; echo "GATE FAIL: $label world gen"; exit 1; }
-    sbt -batch "runMain graft.Verify /tmp/gate_${label}world /tmp/gate_v$label" \
-      > "/tmp/gate_v$label.log" 2>&1 \
-      || { tail -30 "/tmp/gate_v$label.log"; echo "GATE FAIL: Verify on $label world"; exit 1; }
-    python3 tools/check.py "/tmp/gate_${label}world" "/tmp/gate_v$label" --unordered \
-      > "/tmp/gate_check_$label.log"
-    tail -2 "/tmp/gate_check_$label.log"
-    tail -1 "/tmp/gate_check_$label.log" | grep -q " 0 fail" \
-      || { echo "GATE FAIL: $label-world oracle mismatch"; exit 1; }
+if [[ "$FAST" == "--worlds" ]]; then
+  # graft.tools.Worlds writes each named world to /tmp/gate_worlds/<w>
+  # and dumps it with Verify into /tmp/gate_worlds/<w>.out, all in one
+  # session: one JVM per source scale
+  run_worlds() {  # <src sf dir> <world>...
+    local sf=$1; shift
+    local log="/tmp/gate_worlds_$(basename "$sf").log"
+    echo "== gate: worlds $* @ $(basename "$sf") =="
+    sbt -batch "runMain graft.tools.Worlds $sf /tmp/gate_worlds $*" > "$log" 2>&1 \
+      || { tail -30 "$log"; echo "GATE FAIL: world gen or Verify @ $(basename "$sf")"; exit 1; }
   }
-  run_world null /root/testdata/sf0.01 graft.tools.NullWorld
-  run_world empty /root/testdata/sf0.01 graft.tools.EmptyWorld all
-  run_world facts /root/testdata/sf0.01 graft.tools.EmptyWorld facts
-  run_world unicode /root/testdata/sf0.01 graft.tools.UnicodeWorld
-  run_world nonfinite /root/testdata/sf0.01 graft.tools.NonFiniteWorld
-  run_world tie /root/testdata/sf0.01 graft.tools.TieWorld
-  run_world numerics /root/testdata/sf0.01 graft.tools.NumericsWorld
   # orphan world de-vacuizes join_anti / sql_tpch_q22 (the driver's
   # saturated fixtures make both return 0 rows — a 0=0 hash match
   # proves nothing about the predicates)
-  run_world orphan /root/testdata/sf0.01 graft.tools.OrphanWorld
+  run_worlds /root/testdata/sf0.01 \
+    null empty facts unicode nonfinite tie numerics orphan layout
   # skew runs at sf0.1, not sf0.01: the planted boilerplate only crosses
   # the hot-shingle df-cap (50 per source) from sf0.1 upward — below
   # that the cap is latent and the world tests nothing the clean
-  # differential doesn't. Slowest world (~12 min: sf0.1 Verify + the
-  # DuckDB shingle CTEs at 50k docs).
-  run_world skew /root/testdata/sf0.1 graft.tools.SkewWorld
+  # differential doesn't. Slowest world (~26 min on a 4-core VM: ~20
+  # for the sf0.1 gen + Verify, ~6 for the DuckDB shingle CTEs at 50k
+  # docs).
+  run_worlds /root/testdata/sf0.1 skew
+
+  for w in null empty facts unicode nonfinite tie numerics orphan skew; do
+    echo "== gate: $w-world differential =="
+    python3 tools/check.py "/tmp/gate_worlds/$w" "/tmp/gate_worlds/$w.out" --unordered \
+      > "/tmp/gate_check_$w.log"
+    tail -2 "/tmp/gate_check_$w.log"
+    tail -1 "/tmp/gate_check_$w.log" | grep -q " 0 fail" \
+      || { echo "GATE FAIL: $w-world oracle mismatch"; exit 1; }
+  done
 
   # layout world is NOT an oracle differential (both engines read the
   # same layout, so engine agreement can't see layout sensitivity) —
@@ -99,13 +100,7 @@ if [[ "$FAST" == "--null" || "$FAST" == "--worlds" ]]; then
   # /tmp/gate_vout dump (declared merge-order-sensitive sketches are
   # NOTEd, not failed — see tools/layout_check.py SENSITIVE).
   echo "== gate: layout-invariance sweep @ sf0.01 =="
-  sbt -batch "runMain graft.tools.LayoutWorld /root/testdata/sf0.01 /tmp/gate_layoutworld" \
-    > /tmp/gate_layoutgen.log 2>&1 \
-    || { tail -30 /tmp/gate_layoutgen.log; echo "GATE FAIL: layout world gen"; exit 1; }
-  sbt -batch "runMain graft.Verify /tmp/gate_layoutworld /tmp/gate_vlayout" \
-    > /tmp/gate_vlayout.log 2>&1 \
-    || { tail -30 /tmp/gate_vlayout.log; echo "GATE FAIL: Verify on layout world"; exit 1; }
-  python3 tools/layout_check.py /tmp/gate_vout /tmp/gate_vlayout \
+  python3 tools/layout_check.py /tmp/gate_vout /tmp/gate_worlds/layout.out \
     > /tmp/gate_check_layout.log \
     || { grep "^FAIL" /tmp/gate_check_layout.log | head -5;
          echo "GATE FAIL: layout sensitivity"; exit 1; }

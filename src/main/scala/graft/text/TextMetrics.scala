@@ -46,49 +46,29 @@ object TextMetrics extends QueryPack {
     * re-evaluates the O(L) array per window, O(L²) interpreted; the
     * relational explode + sliding-min window burned a corpus-sized
     * doc_id shuffle+sort before sampling.)
-    * The candidate join is an equi-join on (source, fp) —
-    * high-cardinality mod-1e9+7 values, skew bounded by the same df ≤
-    * [[TextOps.hotShingleCap]] cap (and the same cap-after-size
-    * ordering) as dedup_ngram; set sizes stay exact. The winnowed
-    * table is lazily checkpointed so the self-join's two sides share
-    * one materialization. */
+    * The candidate join is [[TextOps.overlapPairs]] over the winnowed
+    * fingerprints: an equi-join on (source, fp), high-cardinality
+    * mod-1e9+7 values, skew bounded by the same df cap as dedup_ngram;
+    * set sizes stay exact. */
   def winnowPairs(d: DataFrame): DataFrame = {
     val s = d.sparkSession
     import s.implicits._
-    val shW = d
+    val fp = d
       .withColumn("norm", TextOps.normCol)
       .where(length($"norm") >= 11)
       // native winnow_fingerprints Generator
       // (graft.functions.WinnowFingerprints): rolling Karp–Rabin +
       // monotonic-deque sliding min + dedupe in ONE O(L) map-side
-      // pass, emitting only the ~2/(w+1)-density winnowed set. The
-      // relational spelling exploded every k-gram hash (~L rows/doc)
-      // and burned a doc_id shuffle+sort on count/sliding-min windows
-      // plus a distinct before any real work; set-identical output
-      // (differential in KGramHashesSpec), oracle unchanged.
+      // pass, emitting each doc's distinct winnowed set (differential
+      // in KGramHashesSpec)
       .select($"doc_id", $"source",
         graft.functions.TextFunctions.winnowFingerprints($"norm", 8, 4)
           .as("fp"))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy($"source", $"fp")))
-      .localCheckpoint(false)
-    // per-doc fingerprint-set sizes attach at the PAIR level (r16,
-    // the dedupNgram restructure): the sz window was a second
-    // shuffle+sort of the fingerprint stream keyed on doc_id; the
-    // same pre-cap count reads off the checkpoint as a doc-keyed
-    // aggregate and joins onto the collision-sized pair table.
-    val sz = shW.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
-    val sh = shW.where($"df" <= TextOps.hotShingleCap)
-    val a = sh.select($"doc_id".as("doc_a"), $"source".as("src_a"), $"fp")
-    val b = sh.select($"doc_id".as("doc_b"), $"source".as("src_b"), $"fp")
-    a.join(b, a("fp") === b("fp") && $"src_a" === $"src_b" && $"doc_a" < $"doc_b")
-      .groupBy($"doc_a", $"doc_b")
-      .agg(count(lit(1)).as("n_shared"))
-      .join(sz.select($"doc_id".as("doc_a"), $"sz".as("sz_a")), Seq("doc_a"))
-      .join(sz.select($"doc_id".as("doc_b"), $"sz".as("sz_b")), Seq("doc_b"))
+    TextOps.overlapPairs(fp)
       .withColumn("winnow_sim",
-        $"n_shared".cast("double") / least($"sz_a", $"sz_b").cast("double"))
+        $"inter".cast("double") / least($"sz_a", $"sz_b").cast("double"))
       .where($"winnow_sim" >= 0.5)
-      .select($"doc_a", $"doc_b", $"n_shared", $"winnow_sim")
+      .select($"doc_a", $"doc_b", $"inter".as("n_shared"), $"winnow_sim")
       .orderBy($"doc_a", $"doc_b")
   }
 
@@ -367,8 +347,8 @@ object TextMetrics extends QueryPack {
     // formatted-plan lines for the one query, a measurable slice of
     // its fixed cost (guide §1.4 / §3.3: materialize intermediates to
     // truncate very wide plans). keepQ is doc_id-only (skinny at any
-    // scale); exactSurv is the same corpus-sized intermediate the sh
-    // checkpoint below already pins.
+    // scale); exactSurv is the same corpus-sized intermediate the
+    // shingle checkpoint of jaccardPairs already pins.
     val keepQ = qualityGate(d).where($"keep").select($"doc_id")
       .localCheckpoint(false)
     val q = d.join(keepQ, Seq("doc_id"))
@@ -378,26 +358,8 @@ object TextMetrics extends QueryPack {
       .where($"doc_id" === $"keep_id")
       .select($"doc_id", $"source", $"text", $"n_chars")
       .localCheckpoint(false)
-    val shW = exactSurv
-      .select($"doc_id", $"source",
-        graft.functions.TextFunctions.wordNGrams($"text", 3).as("sh"))
-      .distinct()
-      .withColumn("df", count(lit(1)).over(Window.partitionBy($"source", $"sh")))
-      .localCheckpoint(false)
-    // per-doc set sizes attach at the pair level (r16, the dedupNgram
-    // restructure — one window over the shingle stream, not two)
-    val sz = shW.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
-    val sh = shW.where($"df" <= TextOps.hotShingleCap)
-    val a = sh.select($"doc_id".as("doc_a"), $"source".as("src_a"), $"sh")
-    val b = sh.select($"doc_id".as("doc_b"), $"source".as("src_b"), $"sh")
-    val losers = a
-      .join(b, a("sh") === b("sh") && $"src_a" === $"src_b" && $"doc_a" < $"doc_b")
-      .groupBy($"doc_a", $"doc_b")
-      .agg(count(lit(1)).as("inter"))
-      .join(sz.select($"doc_id".as("doc_a"), $"sz".as("sz_a")), Seq("doc_a"))
-      .join(sz.select($"doc_id".as("doc_b"), $"sz".as("sz_b")), Seq("doc_b"))
-      .where($"inter".cast("double") /
-             ($"sz_a" + $"sz_b" - $"inter").cast("double") >= 0.6)
+    val losers = TextOps.jaccardPairs(exactSurv)
+      .where($"jaccard" >= 0.6)
       .select($"doc_b".as("doc_id")).distinct()
     val finalSurv = exactSurv.join(losers, Seq("doc_id"), "left_anti")
     d.groupBy($"source")

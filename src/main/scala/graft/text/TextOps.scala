@@ -52,75 +52,88 @@ object TextOps extends QueryPack {
       .orderBy($"doc_id")
   }
 
-  /** Hot-shingle document-frequency cap for the n-gram self-join: a
-    * "stop shingle" shared by k docs makes a k² join group — at 100 TB
-    * one boilerplate phrase in 1% of docs is a quadratic blowup. Any
-    * shingle in more than this many docs (per source) is dropped from
-    * CANDIDATE GENERATION (set sizes stay exact), bounding every join
-    * group at CAP². Mirrored verbatim in the DuckDB oracles, so the
-    * semantics are checked, not just asserted. */
+  /** Hot-shingle document-frequency cap for the key-overlap self-join
+    * ([[overlapPairs]]): a "stop shingle" shared by k docs makes a k²
+    * join group — at 100 TB one boilerplate phrase in 1% of docs is a
+    * quadratic blowup. Any key in more than this many docs (per source)
+    * is dropped from CANDIDATE GENERATION (set sizes stay exact),
+    * bounding every join group at CAP². Mirrored verbatim in the DuckDB
+    * oracles, so the semantics are checked, not just asserted. */
   val hotShingleCap = 50
 
-  /** Word-3-gram Jaccard near-dup pairs within the same source.
-    * Exact set semantics (distinct shingles), SQL-oracle-able; the
-    * probabilistic MinHash/SimHash variants live in graft.vec.
-    * Shingles hotter than [[hotShingleCap]] are excluded from the
-    * self-join (skew bound); intersection counts therefore exclude
-    * them while set sizes don't — a pair must share enough RARE
-    * shingles to surface, the standard stop-shingle trade. */
-  def dedupNgram(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // per-doc shingle-set size and per-shingle doc frequency ride
-    // along as window counts, so the expensive shingle subtree appears
-    // only twice in the plan (the two join sides) instead of six times
-    // (sides + two size joins + two df joins). The LAZY localCheckpoint
-    // then collapses even those two to one: the self-join's sides share
-    // one RDD, so explode+distinct+windows run once and the second side
-    // reads the materialized blocks (lazy, not eager, so merely
-    // CONSTRUCTING the query — PlanSpec does — executes nothing). The
-    // checkpoint holds the shingle stream from BEFORE the df cap (sz
-    // below must count each doc's full distinct set), hot shingles
-    // included, and the cap filter re-runs on each self-join side: a
-    // larger cache than the capped table would be, sized by corpus
-    // shingles, partitioned, MEMORY_AND_DISK — still the standard
-    // space-for-recompute trade against two window passes per consumer.
-    val shW = docs(s, dir)
-      // native word_ngrams Generator (graft.functions.WordNGrams): one
-      // Generate node straight off the text column — replaces the
-      // split→sequence→transform→explode chain, which materialized the
-      // words array AND the grams array per row before exploding, and
-      // which ERRORED under ANSI on sub-3-word docs. Identical output
-      // on the >= 3-word domain (differential in WordNGramsSpec); the
-      // DuckDB oracles still spell the HOF form.
-      .select($"doc_id", $"source",
-        graft.functions.TextFunctions.wordNGrams($"text", 3).as("sh"))
+  /** Each doc's distinct word 3-grams as (doc_id, source, sh) rows.
+    * The native word_ngrams Generator (graft.functions.WordNGrams) is
+    * one Generate node straight off the text column: no per-row words
+    * or grams array, and no ANSI error on sub-3-word docs (they emit
+    * nothing). Identical output on the >= 3-word domain (differential
+    * in WordNGramsSpec); the DuckDB oracles spell the
+    * split→sequence→transform→explode HOF form. */
+  private[text] def shingles(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), col("source"),
+        graft.functions.TextFunctions.wordNGrams(col("text"), 3).as("sh"))
       .distinct()
-      .withColumn("df", count(lit(1)).over(Window.partitionBy($"source", $"sh")))
+
+  /** The df-capped key-overlap self-join behind the near-dup family
+    * (dedup_ngram, dedup_contained, dedup_winnow, pipeline_curate_full):
+    * candidate generation on shared rare keys, which each caller then
+    * verifies with its own exact predicate.
+    *
+    * `keys` holds DISTINCT (doc_id, source, key) rows, the key in the
+    * third column whatever its name. Returns one row per same-source
+    * pair doc_a < doc_b that shares at least one key held by at most
+    * [[hotShingleCap]] docs of that source: `inter` counts those shared
+    * keys; `sz_a`/`sz_b` are the full key-set sizes and `szc_a`/`szc_b`
+    * the capped ones (column pruning drops whichever a caller leaves
+    * unread).
+    *
+    * Scale shape: the key stream and its per-(source, key) df are
+    * lazily checkpointed BEFORE the cap, so the two join sides and the
+    * size aggregate read one materialization; the cap filter re-runs
+    * on each side. The join is keyed on (source, key), so its skew is
+    * bounded by the cap. Sizes attach at the PAIR level: one doc-keyed
+    * aggregate of the checkpoint joins onto the collision-sized pair
+    * table, instead of a second window (a shuffle+sort of the whole
+    * stream on doc_id) carrying one long per stream row into the join. */
+  private[graft] def overlapPairs(keys: DataFrame): DataFrame = {
+    val s = keys.sparkSession
+    import s.implicits._
+    // read the key column under its own name: a renaming projection
+    // above the caller's distinct hides the checkpoint's (source, key)
+    // partitioning from the join (seen with adaptive execution off:
+    // two extra shuffles before the join)
+    val key = keys.columns(2)
+    val k = keys
+      .withColumn("df", count(lit(1)).over(Window.partitionBy($"source", col(key))))
       .localCheckpoint(false)
-    // per-doc set sizes attach at the PAIR level, not the stream
-    // level (r16): the old sz window was a SECOND shuffle+sort of the
-    // whole shingle stream keyed on doc_id, only to carry one long
-    // per row into the self-join; the pair aggregate is collision-
-    // sized, so joining the doc-keyed size table onto IT moves the
-    // sizes across a table orders of magnitude smaller (the skinny-
-    // banding argument of r15's minhashPairs, applied to the exact-
-    // shingle family; guide §2.3/§2.4). sz still counts the FULL
-    // distinct set per doc (pre df-cap — the window ran before the
-    // filter), read off the same checkpoint.
-    val sz = shW.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
-    val sh = shW.where($"df" <= hotShingleCap)
-    val a = sh.select($"doc_id".as("doc_a"), $"source".as("src_a"), $"sh")
-    val b = sh.select($"doc_id".as("doc_b"), $"source".as("src_b"), $"sh")
-    a.join(b, a("sh") === b("sh") && $"src_a" === $"src_b" && $"doc_a" < $"doc_b")
+    val rare = $"df" <= hotShingleCap
+    val sz = k.groupBy($"doc_id").agg(count(lit(1)).as("sz"), count(when(rare, 1)).as("szc"))
+    val capped = k.where(rare)
+    capped.select($"doc_id".as("doc_a"), $"source", col(key))
+      .join(capped.select($"doc_id".as("doc_b"), $"source", col(key)), Seq("source", key))
+      .where($"doc_a" < $"doc_b")
       .groupBy($"doc_a", $"doc_b")
       .agg(count(lit(1)).as("inter"))
-      .join(sz.select($"doc_id".as("doc_a"), $"sz".as("sz_a")), Seq("doc_a"))
-      .join(sz.select($"doc_id".as("doc_b"), $"sz".as("sz_b")), Seq("doc_b"))
+      .join(sz.select($"doc_id".as("doc_a"), $"sz".as("sz_a"), $"szc".as("szc_a")), Seq("doc_a"))
+      .join(sz.select($"doc_id".as("doc_b"), $"sz".as("sz_b"), $"szc".as("szc_b")), Seq("doc_b"))
+  }
+
+  /** Word-3-gram Jaccard over [[overlapPairs]] of [[shingles]], within
+    * the same source. Exact set semantics (full set sizes), checked
+    * against a DuckDB oracle; the probabilistic MinHash/SimHash
+    * variants live in graft.vec. Hot shingles count in the sizes but
+    * not in `inter`: a pair must share enough RARE shingles to surface,
+    * the standard stop-shingle trade. */
+  private[text] def jaccardPairs(d: DataFrame): DataFrame = {
+    val s = d.sparkSession
+    import s.implicits._
+    overlapPairs(shingles(d))
       .select($"doc_a", $"doc_b", $"inter",
               ($"inter".cast("double") /
                ($"sz_a" + $"sz_b" - $"inter").cast("double")).as("jaccard"))
-      .orderBy($"doc_a", $"doc_b")
   }
+
+  def dedupNgram(s: SparkSession, dir: String): DataFrame =
+    jaccardPairs(docs(s, dir)).orderBy(col("doc_a"), col("doc_b"))
 
   /** Containment dedup — quoted/embedded copies, not just near-twins:
     * doc A is contained in doc B when EVERY rare shingle of A appears
@@ -128,46 +141,20 @@ object TextOps extends QueryPack {
     * Jaccard misses these: a short doc quoted inside a long one has
     * low union similarity but full containment. Condition inter =
     * |A_capped| with |B_capped| > |A_capped| (proper containment —
-    * equal sets are exact-dup territory) over the same df-capped
-    * shingle join as [[dedupNgram]]; sizes here are CAPPED set sizes
-    * on both sides so the predicate is exact over what the join can
-    * see. Same scale shape: one shingle-keyed shuffle, skew bounded
-    * by the cap, lazy-checkpointed so the self-join sides share one
-    * materialization. */
+    * equal sets are exact-dup territory) over [[overlapPairs]] of
+    * [[shingles]]; sizes here are CAPPED set sizes on both sides so the
+    * predicate is exact over what the join can see. Each unordered
+    * pair is read once and emitted smaller set → larger. */
   def containedPairs(d: DataFrame): DataFrame = {
     val s = d.sparkSession
     import s.implicits._
-    val sh = d
-      // native word_ngrams Generator (graft.functions.WordNGrams): one
-      // Generate node straight off the text column — replaces the
-      // split→sequence→transform→explode chain, which materialized the
-      // words array AND the grams array per row before exploding.
-      // Bit-identical semantics (incl. the <3-word degenerate case);
-      // the DuckDB oracles still spell the HOF form.
-      .select($"doc_id", $"source",
-        graft.functions.TextFunctions.wordNGrams($"text", 3).as("sh"))
-      .distinct()
-      .withColumn("df", count(lit(1)).over(Window.partitionBy($"source", $"sh")))
-      .where($"df" <= hotShingleCap)
-      .localCheckpoint(false)
-    // CAPPED set sizes attach at the pair level (r16, the dedupNgram
-    // restructure): the szc window was a second shuffle+sort of the
-    // capped stream keyed on doc_id; the same count reads off the
-    // checkpoint as a doc-keyed aggregate and joins onto the
-    // collision-sized pair table instead. Sizes are post-cap either
-    // way (the window ran after the df filter), so the containment
-    // predicate is unchanged.
-    val szc = sh.groupBy($"doc_id").agg(count(lit(1)).as("szc"))
-    val a = sh.select($"doc_id".as("id_a"), $"source".as("src_a"), $"sh")
-    val b = sh.select($"doc_id".as("id_b"), $"source".as("src_b"), $"sh")
-    a.join(b, a("sh") === b("sh") && $"src_a" === $"src_b" && $"id_a" =!= $"id_b")
-      .groupBy($"id_a", $"id_b")
-      .agg(count(lit(1)).as("inter"))
-      .join(szc.select($"doc_id".as("id_a"), $"szc".as("sz_a")), Seq("id_a"))
-      .join(szc.select($"doc_id".as("id_b"), $"szc".as("sz_b")), Seq("id_b"))
-      .where($"inter" === $"sz_a" && $"sz_b" > $"sz_a" && $"sz_a" >= 3)
-      .select($"id_a".as("contained_id"), $"id_b".as("container_id"),
-              $"sz_a".as("n_shingles"), $"sz_b".as("container_sz"))
+    val small = least($"szc_a", $"szc_b")
+    val aInB = $"szc_a" < $"szc_b"
+    overlapPairs(shingles(d))
+      .where($"inter" === small && $"szc_a" =!= $"szc_b" && small >= 3)
+      .select(when(aInB, $"doc_a").otherwise($"doc_b").as("contained_id"),
+              when(aInB, $"doc_b").otherwise($"doc_a").as("container_id"),
+              small.as("n_shingles"), greatest($"szc_a", $"szc_b").as("container_sz"))
       .orderBy($"contained_id", $"container_id")
   }
 
@@ -190,17 +177,7 @@ object TextOps extends QueryPack {
     val evalSrc = "src0"
     // train and eval sides both derive from this subtree — lazy
     // checkpoint so explode+distinct runs once, not once per side
-    val sh = docs(s, dir)
-      // native word_ngrams Generator (graft.functions.WordNGrams): one
-      // Generate node straight off the text column — replaces the
-      // split→sequence→transform→explode chain, which materialized the
-      // words array AND the grams array per row before exploding.
-      // Bit-identical semantics (incl. the <3-word degenerate case);
-      // the DuckDB oracles still spell the HOF form.
-      .select($"doc_id", $"source",
-        graft.functions.TextFunctions.wordNGrams($"text", 3).as("sh"))
-      .distinct()
-      .localCheckpoint(false)
+    val sh = shingles(docs(s, dir)).localCheckpoint(false)
     val evalSh = sh.where($"source" === evalSrc)
       .select($"doc_id".as("eval_id"), $"sh")
     // eval-shingle semi-join BEFORE the df window (r16, guide §3.2's
@@ -544,6 +521,23 @@ object TextOps extends QueryPack {
       .orderBy($"doc_id")
   }
 
+  /** Exact-duplicate star: (keep_id, doc_id) for every doc whose
+    * normalized text also belongs to a smaller doc_id, keep_id being
+    * the smallest. Null text never pairs (unknown content — the
+    * dedupExact rule), so null-text docs always survive and stay
+    * singleton clusters; they are filtered BEFORE the window so they
+    * don't ride the norm shuffle either. */
+  private def exactStar(d: DataFrame): DataFrame = {
+    val s = d.sparkSession
+    import s.implicits._
+    d.withColumn("norm", normCol)
+      .where($"norm".isNotNull)
+      .select($"doc_id", $"norm")
+      .withColumn("keep_id", min($"doc_id").over(Window.partitionBy($"norm")))
+      .where($"doc_id" =!= $"keep_id")
+      .select($"keep_id", $"doc_id")
+  }
+
   /** End-to-end dedup survivor selection: union exact-duplicate losers
     * (every doc that is not the min-id of its normalized-text group)
     * with near-duplicate losers (3-gram Jaccard ≥ 0.6 within source),
@@ -555,15 +549,7 @@ object TextOps extends QueryPack {
   def dedupSurvivors(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d = docs(s, dir)
-    // null text never pairs (unknown content — the dedupExact rule),
-    // so null-text docs always survive; filtered BEFORE the window so
-    // they don't ride the norm shuffle either
-    val exactPairs = d.withColumn("norm", normCol)
-      .where($"norm".isNotNull)
-      .select($"doc_id", $"norm")
-      .withColumn("keep_id", min($"doc_id").over(Window.partitionBy($"norm")))
-      .where($"doc_id" =!= $"keep_id")
-      .select($"doc_id".as("doc_b"))
+    val exactPairs = exactStar(d).select($"doc_id".as("doc_b"))
     val nearPairs = dedupNgram(s, dir)
       .where($"jaccard" >= 0.6)
       .select($"doc_b")
@@ -589,14 +575,7 @@ object TextOps extends QueryPack {
     * near pairs. */
   private def dupEdges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // null text contributes no edges (unknown content — the dedupExact
-    // rule): null-text docs stay singleton clusters
-    val exactE = docs(s, dir).withColumn("norm", normCol)
-      .where($"norm".isNotNull)
-      .select($"doc_id", $"norm")
-      .withColumn("m", min($"doc_id").over(Window.partitionBy($"norm")))
-      .where($"doc_id" =!= $"m")
-      .select($"m".as("a"), $"doc_id".as("b"))
+    val exactE = exactStar(docs(s, dir)).select($"keep_id".as("a"), $"doc_id".as("b"))
     val nearE = dedupNgram(s, dir).where($"jaccard" >= 0.6)
       .select($"doc_a".as("a"), $"doc_b".as("b"))
     exactE.unionByName(nearE)
@@ -654,7 +633,7 @@ object TextOps extends QueryPack {
     val stride = 150
     // the fingerprint table feeds BOTH the doc-frequency aggregate and
     // the verdict re-join — lazy localCheckpoint (house pattern, see
-    // dedupNgram) so the Generate+md5 pass over the full text corpus
+    // overlapPairs) so the Generate+md5 pass over the full text corpus
     // runs once and the second consumer reads the materialized blocks
     val ch = d
       .select($"doc_id", $"text", length($"text").as("len"))

@@ -1136,7 +1136,7 @@ object VectorOps extends QueryPack {
   def simhashPairsOf(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     // the tokens×64 vote fold is ~all the query's cost, and the
     // self-join would evaluate it once per side — LAZY checkpoint so
-    // both sides read one materialization (the dedupNgram pattern)
+    // both sides read one materialization (the overlapPairs pattern)
     val sig = simhashSig(docs).select(col("doc_id"), col("simhash"))
       .localCheckpoint(false)
     val banded = sig.select(col("doc_id"), col("simhash"),

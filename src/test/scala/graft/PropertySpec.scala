@@ -581,4 +581,47 @@ class PropertySpec extends AnyFunSuite {
       assert(got == exp, s"trial $trial: assignments")
     }
   }
+
+  test("overlapPairs equals a plain-Scala reference across the df-cap boundary") {
+    // Random key sets over two sources, plus three planted keys: one
+    // held by exactly cap docs of src0 (kept), one by cap + 1 (dropped)
+    // and one held by one src0 doc and one src1 doc (pairs form within a
+    // source, so it never pairs). The key column is deliberately not
+    // named "key".
+    import spark.implicits._
+    val cap = graft.text.TextOps.hotShingleCap
+    val src0 = (0L until 60L).map(_ -> "src0")
+    val src1 = (100L until 130L).map(_ -> "src1")
+    for (trial <- 1 to 3) {
+      val random = (src0 ++ src1).zipWithIndex.flatMap { case ((id, src), i) =>
+        Gen.listOf(Gen.chooseNum(0, 39))
+          .apply(Gen.Parameters.default.withSize(6), rng.Seed(700L * trial + i))
+          .get.map(r => (id, src, s"r$r"))
+      }
+      val planted = (0L until cap.toLong).map(id => (id, "src0", "kept")) ++
+        (5L until 6L + cap).map(id => (id, "src0", "hot")) ++
+        Seq((0L, "src0", "cross"), (100L, "src1", "cross"))
+      val rows = (random ++ planted).distinct
+      val got = graft.text.TextOps.overlapPairs(rows.toDF("doc_id", "source", "k"))
+        .select($"doc_a", $"doc_b", $"inter", $"sz_a", $"sz_b", $"szc_a", $"szc_b")
+        .collect().map(r => (0 to 6).map(r.getLong)).toSeq
+        .sortBy(r => (r(0), r(1)))
+
+      val df = rows.groupBy(r => (r._2, r._3)).map { case (g, rs) => g -> rs.size }
+      val capped = rows.filter(r => df((r._2, r._3)) <= cap)
+      val sz = rows.groupBy(_._1).map { case (id, rs) => id -> rs.size.toLong }
+      val szc = capped.groupBy(_._1).map { case (id, rs) => id -> rs.size.toLong }
+      val expect = capped.groupBy(r => (r._2, r._3)).values
+        .flatMap { rs => for (a <- rs; b <- rs if a._1 < b._1) yield (a._1, b._1) }
+        .groupBy(identity).toSeq
+        .map { case ((a, b), n) => Seq(a, b, n.size.toLong, sz(a), sz(b), szc(a), szc(b)) }
+        .sortBy(r => (r(0), r(1)))
+      val (missing, extra) = (expect.diff(got), got.diff(expect))
+      if (missing.nonEmpty || extra.nonEmpty)
+        fail(s"trial $trial: (doc_a, doc_b, inter, sz_a, sz_b, szc_a, szc_b) " +
+          s"missing ${missing.take(3)}, extra ${extra.take(3)}")
+      assert(got.count(r => r(0) < cap && r(1) < cap) == cap * (cap - 1) / 2,
+        s"trial $trial: the key held by exactly cap docs must pair them all")
+    }
+  }
 }

@@ -2,8 +2,9 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.functions.{col, posexplode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -12,13 +13,12 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** Exact top-k rows per GROUP in O(k) state — the aggregate Spark
-  * lacks for the "top N per key" shape. The built-in route is a window
-  * `row_number` + filter, which sorts every group in full (and at
-  * 100 TB, a full sort of each group's rows just to keep 3 of them is
-  * the textbook wasted shuffle+sort). This aggregate keeps a k-bounded
-  * min-heap per group instead: update is O(log k) per row, partial
-  * buffers merge associatively map-side like any sum, and the sort that
-  * remains is the final k elements per group.
+  * lacks for the "top N per key" shape, where the built-in route is a
+  * window `row_number` + filter that sorts every group in full (see
+  * [[BoundedTopK.topKRows]], the one caller-facing selection). This
+  * aggregate keeps a k-bounded min-heap per group instead: update is
+  * O(log k) per row, partial buffers merge associatively map-side like
+  * any sum, and the sort that remains is the final k elements per group.
   *
   * Semantics: keep the k rows with the LARGEST `ord`, ties broken by
   * the SMALLEST `id` — a total order, so the result is deterministic
@@ -137,4 +137,30 @@ object BoundedTopK {
     GraftColumnBridge.column(
       BoundedTopK(GraftColumnBridge.expression(ord.cast("double")),
         GraftColumnBridge.expression(id.cast("long")), k).toAggregateExpression())
+
+  /** The top `k` rows of every group of `keys` — the one ranked-list
+    * selection behind every per-query and per-group top-k (the
+    * `sim_search*` / `sim_knn_join*` lists, shortlists and IVF probe
+    * cells, `topk_grouped`, `sample_group_k`). Keeps the k largest
+    * `ord` per group, ties to the smaller `id`, skipping null
+    * `ord`/`id` rows. Returns `keys…, id, ord, rk` with `rk` an int
+    * from 1 to ≤ k (a group with fewer than k rows keeps them all).
+    * `keys` must be plain named columns: they are read again by name
+    * after the aggregate.
+    *
+    * Why not `row_number() OVER (PARTITION BY keys ORDER BY ord DESC,
+    * id ASC) <= k`: the window shuffles every scored row to |groups|
+    * partitions and sorts each in full — over a corpus × queries
+    * product at 100 TB that sort dwarfs the scoring. The heap reduces
+    * each scan partition to a k-bounded summary map-side, so only
+    * |groups| × partitions × k rows shuffle. Both spell one total
+    * order, so they return the same rows: the DuckDB oracles run the
+    * window, and the differential proves heap ≡ full sort. */
+  def topKRows(df: DataFrame, keys: Seq[Column], ord: Column, id: Column,
+               k: Int): DataFrame =
+    df.groupBy(keys: _*)
+      .agg(boundedTopK(ord, id, k).as("top"))
+      .select(keys :+ posexplode(col("top")): _*)
+      .select(keys ++ Seq(col("col.id").as("id"), col("col.ord").as("ord"),
+        (col("pos") + 1).cast("int").as("rk")): _*)
 }

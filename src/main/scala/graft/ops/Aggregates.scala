@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryPack
+import graft.functions.BoundedTopK.topKRows
 import graft.io.Tables.t
 import graft.util.Det._
 
@@ -333,25 +334,17 @@ object Aggregates extends QueryPack {
       .orderBy($"o_orderpriority")
   }
 
-  /** Top-3 customers per segment by balance via the native BoundedTopK
-    * aggregate (graft.functions.BoundedTopK) — the "top N per key"
-    * shape done WITHOUT a window sort: state is a k-bounded heap per
-    * group, partials merge map-side like any sum, and the plan is an
+  /** Top-3 customers per segment by balance via
+    * [[graft.functions.BoundedTopK.topKRows]] — the "top N per key"
+    * shape done WITHOUT a window sort: the plan is an
     * ObjectHashAggregate pair with zero WindowExec and zero pre-shuffle
-    * sort (locked in PlanSpec). The window row_number formulation —
-    * which sorts every group in full to keep 3 rows — is exactly what
-    * the DuckDB oracle runs, so the differential also proves the two
-    * formulations agree. Ties break on customer key: a total order,
-    * deterministic under any partitioning and merge order. */
+    * sort (locked in PlanSpec). Ties break on customer key. */
   def topkGrouped(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "customer")
-      .groupBy($"c_mktsegment")
-      .agg(graft.functions.BoundedTopK
-        .boundedTopK($"c_acctbal", $"c_custkey", 3).as("top"))
-      .select($"c_mktsegment", posexplode($"top"))
-      .select($"c_mktsegment", ($"pos" + 1).cast("int").as("rk"),
-        $"col.id".as("c_custkey"), round($"col.ord", 2).as("bal"))
+    topKRows(t(s, dir, "customer"), Seq($"c_mktsegment"),
+        $"c_acctbal", $"c_custkey", 3)
+      .select($"c_mktsegment", $"rk", $"id".as("c_custkey"),
+        round($"ord", 2).as("bal"))
       .orderBy($"c_mktsegment", $"rk")
   }
 
@@ -361,22 +354,15 @@ object Aggregates extends QueryPack {
     * — membership is a pure function of the key, so reruns, retries,
     * speculative tasks and the oracle all pick the SAME rows, yet the
     * hash scrambles key order so the pick is not "first 3 by id".
-    * Selection runs through the BoundedTopK heap aggregate (smallest
-    * hash first, so ord = −h): each scan partition reduces to a
-    * k-bounded summary map-side and only |groups|·k-row summaries
-    * shuffle — no group is ever sorted in full, at any scale. The
-    * oracle runs the window row_number formulation, so the
-    * differential proves the two agree. */
+    * Selection runs through [[graft.functions.BoundedTopK.topKRows]]
+    * (smallest hash first, so ord = −h): no group is ever sorted in
+    * full, at any scale. */
   def sampleGroupK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val h = graft.util.Det.knuthHash($"c_custkey")
-    t(s, dir, "customer")
-      .groupBy($"c_mktsegment")
-      .agg(graft.functions.BoundedTopK
-        .boundedTopK(-h.cast("double"), $"c_custkey", 3).as("top"))
-      .select($"c_mktsegment", posexplode($"top"))
-      .select($"c_mktsegment", $"col.id".as("c_custkey"),
-        ($"pos" + 1).cast("int").as("rk"))
+    topKRows(t(s, dir, "customer"), Seq($"c_mktsegment"),
+        -h.cast("double"), $"c_custkey", 3)
+      .select($"c_mktsegment", $"id".as("c_custkey"), $"rk")
       .orderBy($"c_mktsegment", $"rk")
   }
 

@@ -44,14 +44,13 @@ object RecallProbe {
     val mod = math.max(1L, n / nSample)
     val q = e.where(pmod($"vec_id", lit(mod)) === 0)
       .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"))
-    val exactKnn = e.crossJoin(broadcast(q))
+    val scored = e.crossJoin(broadcast(q))
       .where($"vec_id" =!= $"q_id")
       .withColumn("cos", graft.functions.VecFunctions.dotProduct($"q_emb", $"emb") /
         ($"q_nrm" * $"nrm"))
-      .groupBy($"q_id")
-      .agg(graft.functions.BoundedTopK.boundedTopK($"cos", $"vec_id", 3).as("top"))
-      .select($"q_id", explode(expr("transform(top, t -> t.id)")).as("vec_id"))
-      .as[(Long, Long)].collect()
+    val exactKnn = graft.functions.BoundedTopK
+      .topKRows(scored, Seq($"q_id"), $"cos", $"vec_id", 3)
+      .select($"q_id", $"id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val ann = graft.vec.VectorOps.simKnnJoinAnn(spark, sfDir)
       .where(pmod($"id_a", lit(mod)) === 0)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import graft.QueryPack
+import graft.functions.BoundedTopK.topKRows
 import graft.functions.VecFunctions.{dotProduct, l2Norm}
 import graft.io.Tables.t
 
@@ -14,7 +15,8 @@ import graft.io.Tables.t
   * Scale design:
   *  - `sim_search` (exact) broadcasts the QUERY set (tiny) against the
   *    corpus — a map-side scan, no shuffle of the big side; per-query
-  *    top-k via window. At 100 TB the corpus side stays partitioned.
+  *    top-k via the BoundedTopK heap ([[topKRows]], as every ranked
+  *    list here). At 100 TB the corpus side stays partitioned.
   *  - `sim_search_lsh` / `dedup_embed_lsh` bucket by signed random
   *    hyperplanes (seeded, derived from hash() — no RNG state), so
   *    candidate generation is an equi-join on bucket id: the crossJoin
@@ -67,29 +69,49 @@ object VectorOps extends QueryPack {
 
   private def dot(a: Column, b: Column): Column = dotProduct(a, b)
 
+  /** Cosine from precomputed norms; operand order fixes the doubles. */
+  private def cosine(a: Column, na: Column, b: Column, nb: Column): Column =
+    dot(a, b) / (na * nb)
+
+  /** The 5 query vectors of every `sim_search*` query. */
+  private val isQuery: Column = col("vec_id") < 5
+
+  /** (q_id, q_emb, q_nrm, extra…) of the [[isQuery]] rows of `e`. */
+  private def queryVecs(e: DataFrame, extra: Column*): DataFrame =
+    e.where(isQuery).select(Seq(col("vec_id").as("q_id"),
+      col("emb").as("q_emb"), col("nrm").as("q_nrm")) ++ extra: _*)
+
+  /** Refine fetch: each (q_id, vec_id) of shortlist `cand` joined to
+    * its row of `e` and its query's row of `q`. The shortlist is
+    * broadcast, so the corpus never shuffles (a bucketed store also
+    * prunes files). */
+  private def fetchShortlist(e: DataFrame, cand: DataFrame,
+                             q: DataFrame): DataFrame =
+    e.join(broadcast(cand.join(q, Seq("q_id"))), Seq("vec_id"))
+
+  /** Each row of `v` (vec_id, emb, nrm, …) once per each of its
+    * `nprobe` nearest IVF cells by cosine: `v`'s columns plus `cell`.
+    * The cells come from [[topKRows]] and join back onto `v`. */
+  private def probeCells(v: DataFrame, cent: DataFrame,
+                         nprobe: Int): DataFrame = {
+    val scored = v.crossJoin(broadcast(cent)).withColumn("c_cos",
+      cosine(col("emb"), col("nrm"), col("c_emb"), col("c_nrm")))
+    v.join(topKRows(scored, Seq(col("vec_id")), col("c_cos"),
+        col("cent_id"), nprobe).select(col("vec_id"), col("id").as("cell")),
+      Seq("vec_id"))
+  }
+
   /** Exact top-10 cosine neighbors for 5 query vectors (brute force,
-    * broadcast query side — the verifiable baseline). Top-k selection
-    * runs through the native BoundedTopK heap aggregate, NOT a window
-    * row_number: the window formulation shuffles the entire corpus ×
-    * queries product to |queries| partitions and full-sorts each — at
-    * 100 TB that sort alone dwarfs the scoring. The heap aggregate
-    * reduces every scan partition to a k-bounded summary map-side, so
-    * the only thing that shuffles is |queries| × partitions × k rows.
-    * The DuckDB oracle still runs the window formulation — the
-    * differential proves heap ≡ full sort on every neighbor list. */
+    * broadcast query side — the verifiable baseline), selected by
+    * [[topKRows]]. The DuckDB oracle runs the window formulation. */
   def simSearch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
-    val q = e.where($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"))
-    e.crossJoin(broadcast(q))
+    val scored = e.crossJoin(broadcast(queryVecs(e)))
       .where($"vec_id" =!= $"q_id")
-      .withColumn("cos", dot($"q_emb", $"emb") / ($"q_nrm" * $"nrm"))
-      .groupBy($"q_id")
-      .agg(graft.functions.BoundedTopK.boundedTopK($"cos", $"vec_id", 10).as("top"))
-      .select($"q_id", posexplode($"top"))
-      .select($"q_id", $"col.id".as("vec_id"),
-        round($"col.ord", 6).as("cos"), ($"pos" + 1).cast("int").as("rk"))
+      .withColumn("cos", cosine($"q_emb", $"q_nrm", $"emb", $"nrm"))
+    topKRows(scored, Seq($"q_id"), $"cos", $"vec_id", 10)
+      .select($"q_id", $"id".as("vec_id"), round($"ord", 6).as("cos"), $"rk")
       .orderBy($"q_id", $"rk")
   }
 
@@ -105,23 +127,18 @@ object VectorOps extends QueryPack {
     * product runs — which is why filtering must compose with the
     * scan, not with a post-scoring WHERE. Scoring and top-k are
     * byte-identical to [[simSearch]] (broadcast query side, fused
-    * codegen'd dot, BoundedTopK heap); the differential vs the
-    * window-formulation oracle proves the filter changes candidate
-    * GENERATION without perturbing any surviving neighbor list. */
+    * codegen'd dot, [[topKRows]]); the differential vs the oracle
+    * proves the filter changes candidate GENERATION without perturbing
+    * any surviving neighbor list. */
   def simSearchFiltered(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
-    val q = e.where($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"))
-    e.where($"label".isin(2, 3))
-      .crossJoin(broadcast(q))
+    val scored = e.where($"label".isin(2, 3))
+      .crossJoin(broadcast(queryVecs(e)))
       .where($"vec_id" =!= $"q_id")
-      .withColumn("cos", dot($"q_emb", $"emb") / ($"q_nrm" * $"nrm"))
-      .groupBy($"q_id")
-      .agg(graft.functions.BoundedTopK.boundedTopK($"cos", $"vec_id", 10).as("top"))
-      .select($"q_id", posexplode($"top"))
-      .select($"q_id", $"col.id".as("vec_id"),
-        round($"col.ord", 6).as("cos"), ($"pos" + 1).cast("int").as("rk"))
+      .withColumn("cos", cosine($"q_emb", $"q_nrm", $"emb", $"nrm"))
+    topKRows(scored, Seq($"q_id"), $"cos", $"vec_id", 10)
+      .select($"q_id", $"id".as("vec_id"), round($"ord", 6).as("cos"), $"rk")
       .orderBy($"q_id", $"rk")
   }
 
@@ -131,13 +148,9 @@ object VectorOps extends QueryPack {
     * ([[simSearch]] answers 5 queries; this answers ALL of them).
     * Blocking key here is the label (exact, oracle-able); at 100 TB
     * the same plan runs with LSH/IVF bucket ids as the block — the
-    * machinery [[dedupEmbedLsh]]/[[simSearchIvf]] already ship. The
-    * heap aggregate bounds what shuffles to k rows per vector (the
-    * [[simSearch]] argument, but applied corpus-wide: the window
-    * formulation would sort |block|² scored pairs; the heap reduces
-    * each scan partition to k-bounded summaries map-side). DuckDB
-    * runs the window row_number formulation — the differential proves
-    * heap ≡ full sort on every neighbor list.
+    * machinery [[dedupEmbedLsh]]/[[simSearchIvf]] already ship.
+    * [[topKRows]] bounds what shuffles to k rows per vector — applied
+    * corpus-wide, where a window would sort |block|² scored pairs.
     *
     * The probe side is SALTED (8 shards per label): with ~10 labels a
     * plain label join runs ≤10 tasks no matter how many cores the
@@ -159,13 +172,11 @@ object VectorOps extends QueryPack {
     val b = e.select($"vec_id".as("id_b"), $"label",
                      $"emb".as("emb_b"), $"nrm".as("nrm_b"))
       .withColumn("salt", explode(expr(s"sequence(0, ${S - 1})")))
-    a.join(b, Seq("label", "salt")).where($"id_a" =!= $"id_b")
-      .withColumn("cos", dot($"emb_a", $"emb_b") / ($"nrm_a" * $"nrm_b"))
-      .groupBy($"id_a", $"label")
-      .agg(graft.functions.BoundedTopK.boundedTopK($"cos", $"id_b", 3).as("top"))
-      .select($"id_a", $"label", posexplode($"top"))
-      .select($"id_a", $"label", $"col.id".as("id_b"),
-        round($"col.ord", 6).as("cos"), ($"pos" + 1).cast("int").as("rk"))
+    val scored = a.join(b, Seq("label", "salt")).where($"id_a" =!= $"id_b")
+      .withColumn("cos", cosine($"emb_a", $"nrm_a", $"emb_b", $"nrm_b"))
+    topKRows(scored, Seq($"id_a", $"label"), $"cos", $"id_b", 3)
+      .select($"id_a", $"label", $"id".as("id_b"), round($"ord", 6).as("cos"),
+        $"rk")
       .orderBy($"id_a", $"rk")
   }
 
@@ -178,9 +189,8 @@ object VectorOps extends QueryPack {
     * probe side carries each vector to nprobe cells, and the pair
     * space is ~nprobe/k of brute force (n²/8 here; at a real corpus k
     * grows ~√n so the per-cell lists, and with them the join groups,
-    * stay bounded). Scoring reduces map-side through the same
-    * BoundedTopK heap as the exact graph — k-bounded state per
-    * vector, no window sort of the candidate stream. NO ORACLE
+    * stay bounded). Scoring reduces through [[topKRows]] as in the
+    * exact graph — k-bounded state per vector. NO ORACLE
     * (k-means cells are implementation-defined); VectorOpsSpec bounds
     * recall against the exact brute-force global graph. */
   def simKnnJoinAnn(s: SparkSession, dir: String): DataFrame = {
@@ -205,26 +215,17 @@ object VectorOps extends QueryPack {
     val assigned = assignCellsAuto(e, cent, kCent)
       .select($"vec_id".as("id_b"), $"emb".as("emb_b"),
               $"nrm".as("nrm_b"), $"cell")
-    // every vector probes its nprobe nearest cells — the same
-    // broadcast argmax shape as assignCells, heap k=nprobe. A
-    // candidate appears at most once per probe vector (it lives in
-    // exactly one cell), so no pair dedup is needed before the top-k.
-    val probes = e.crossJoin(broadcast(cent))
-      .withColumn("c_cos", dot($"emb", $"c_emb") / ($"nrm" * $"c_nrm"))
-      .groupBy($"vec_id")
-      .agg(graft.functions.BoundedTopK
-             .boundedTopK($"c_cos", $"cent_id", nprobe).as("cells"),
-           first($"emb").as("emb"), first($"nrm").as("nrm"))
+    // every vector probes its nprobe nearest cells. A candidate
+    // appears at most once per probe vector (it lives in exactly one
+    // cell), so no pair dedup is needed before the top-k.
+    val probes = probeCells(e, cent, nprobe)
       .select($"vec_id".as("id_a"), $"emb".as("emb_a"), $"nrm".as("nrm_a"),
-              explode(expr("transform(cells, c -> c.id)")).as("cell"))
-    probes.join(assigned, Seq("cell"))
+              $"cell")
+    val scored = probes.join(assigned, Seq("cell"))
       .where($"id_a" =!= $"id_b")
-      .withColumn("cos", dot($"emb_a", $"emb_b") / ($"nrm_a" * $"nrm_b"))
-      .groupBy($"id_a")
-      .agg(graft.functions.BoundedTopK.boundedTopK($"cos", $"id_b", 3).as("top"))
-      .select($"id_a", posexplode($"top"))
-      .select($"id_a", $"col.id".as("id_b"),
-        round($"col.ord", 6).as("cos"), ($"pos" + 1).cast("int").as("rk"))
+      .withColumn("cos", cosine($"emb_a", $"nrm_a", $"emb_b", $"nrm_b"))
+    topKRows(scored, Seq($"id_a"), $"cos", $"id_b", 3)
+      .select($"id_a", $"id".as("id_b"), round($"ord", 6).as("cos"), $"rk")
       .orderBy($"id_a", $"rk")
   }
 
@@ -238,7 +239,7 @@ object VectorOps extends QueryPack {
     val b = emb(s, dir).select($"vec_id".as("id_b"), $"label".as("lb_b"),
                                $"emb".as("emb_b"), $"nrm".as("nrm_b"))
     a.join(b, $"lb_a" === $"lb_b" && $"id_a" < $"id_b")
-      .withColumn("cos", dot($"emb_a", $"emb_b") / ($"nrm_a" * $"nrm_b"))
+      .withColumn("cos", cosine($"emb_a", $"nrm_a", $"emb_b", $"nrm_b"))
       .where($"cos" >= 0.30)
       .select($"id_a", $"id_b", $"lb_a".as("label"), round($"cos", 6).as("cos"))
       .orderBy($"id_a", $"id_b")
@@ -261,19 +262,15 @@ object VectorOps extends QueryPack {
   def simSearchLsh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir).withColumn("bucket", lshBucket("emb", 8))
-    val q = e.where($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"), $"bucket")
     // each query lives in exactly one bucket, so grouping on (q_id,
     // bucket) is per-query and keeps the bucket column through the
-    // heap top-k (BoundedTopK — no window sort of the candidate set)
-    e.join(broadcast(q), Seq("bucket"))
+    // top-k
+    val scored = e.join(broadcast(queryVecs(e, $"bucket")), Seq("bucket"))
       .where($"vec_id" =!= $"q_id")
-      .withColumn("cos", dot($"q_emb", $"emb") / ($"q_nrm" * $"nrm"))
-      .groupBy($"q_id", $"bucket")
-      .agg(graft.functions.BoundedTopK.boundedTopK($"cos", $"vec_id", 10).as("top"))
-      .select($"q_id", $"bucket", posexplode($"top"))
-      .select($"q_id", $"col.id".as("vec_id"),
-        round($"col.ord", 6).as("cos"), ($"pos" + 1).cast("int").as("rk"), $"bucket")
+      .withColumn("cos", cosine($"q_emb", $"q_nrm", $"emb", $"nrm"))
+    topKRows(scored, Seq($"q_id", $"bucket"), $"cos", $"vec_id", 10)
+      .select($"q_id", $"id".as("vec_id"), round($"ord", 6).as("cos"), $"rk",
+        $"bucket")
       .orderBy($"q_id", $"rk")
   }
 
@@ -284,7 +281,7 @@ object VectorOps extends QueryPack {
     val a = e.select($"vec_id".as("id_a"), $"emb".as("emb_a"), $"nrm".as("nrm_a"), $"bucket")
     val b = e.select($"vec_id".as("id_b"), $"emb".as("emb_b"), $"nrm".as("nrm_b"), $"bucket")
     a.join(b, Seq("bucket")).where($"id_a" < $"id_b")
-      .withColumn("cos", dot($"emb_a", $"emb_b") / ($"nrm_a" * $"nrm_b"))
+      .withColumn("cos", cosine($"emb_a", $"nrm_a", $"emb_b", $"nrm_b"))
       .where($"cos" >= 0.30)
       .select($"id_a", $"id_b", round($"cos", 6).as("cos"), $"bucket")
       .orderBy($"id_a", $"id_b")
@@ -513,25 +510,16 @@ object VectorOps extends QueryPack {
     // n^1.5, in the corpus term)
     val assigned = assignCellsAuto(e, cent, k)
     // queries → their nprobe closest cells
-    val q = e.where($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"))
-    val wProbe = Window.partitionBy($"q_id").orderBy($"c_cos".desc, $"cent_id".asc)
-    val qCells = q.crossJoin(broadcast(cent))
-      .withColumn("c_cos", dot($"q_emb", $"c_emb") / ($"q_nrm" * $"c_nrm"))
-      .withColumn("rn", row_number().over(wProbe))
-      .where($"rn" <= nprobe)
-      .select($"q_id", $"q_emb", $"q_nrm", $"cent_id".as("cell"))
-    // probe: candidates share a cell with the query; final top-10 via
-    // the heap aggregate — the candidate lists (nprobe/k of the corpus
-    // per query) reduce map-side instead of window-sorting
-    assigned.join(broadcast(qCells), Seq("cell"))
+    val qCells = probeCells(e.where(isQuery), cent, nprobe)
+      .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"),
+              $"cell")
+    // probe: candidates share a cell with the query; the candidate
+    // lists (nprobe/k of the corpus per query) reduce to the top-10
+    val scored = assigned.join(broadcast(qCells), Seq("cell"))
       .where($"vec_id" =!= $"q_id")
-      .withColumn("cos", dot($"q_emb", $"emb") / ($"q_nrm" * $"nrm"))
-      .groupBy($"q_id")
-      .agg(graft.functions.BoundedTopK.boundedTopK($"cos", $"vec_id", 10).as("top"))
-      .select($"q_id", posexplode($"top"))
-      .select($"q_id", $"col.id".as("vec_id"),
-        round($"col.ord", 6).as("cos"), ($"pos" + 1).cast("int").as("rk"))
+      .withColumn("cos", cosine($"q_emb", $"q_nrm", $"emb", $"nrm"))
+    topKRows(scored, Seq($"q_id"), $"cos", $"vec_id", 10)
+      .select($"q_id", $"id".as("vec_id"), round($"ord", 6).as("cos"), $"rk")
       .orderBy($"q_id", $"rk")
   }
 
@@ -898,12 +886,11 @@ object VectorOps extends QueryPack {
     * the scan side joins its code stream against it on (sub, cid) —
     * corpus vectors never shuffle, only |Q| skinny partial-sum rows
     * per vector reach the (q_id, vec_id) aggregate, and the shortlist
-    * reduces through the BoundedTopK heap map-side (smaller ADC =
-    * closer, so the heap orders on −adc). Stage 2 is the FAISS
-    * IndexIVFPQ+refine production shape: fetch float vectors for the
-    * ≤ 50·|Q| shortlisted candidates only (broadcast fetch join — the
-    * corpus never shuffles and a bucketed store prunes files) and
-    * re-rank by EXACT L2, so reported distances carry zero
+    * reduces through [[topKRows]] (smaller ADC = closer, so it orders
+    * on −adc). Stage 2 is the FAISS IndexIVFPQ+refine production
+    * shape: fetch float vectors for the ≤ 50·|Q| shortlisted
+    * candidates only ([[fetchShortlist]]) and re-rank by EXACT L2, so
+    * reported distances carry zero
     * quantization error and ADC error can only hurt by dropping a
     * true neighbor off a 50-deep shortlist. No oracle (codebooks are
     * implementation-defined); VectorOpsSpec bounds recall@10 against
@@ -914,41 +901,26 @@ object VectorOps extends QueryPack {
     val e = emb(s, dir)
     val cent = pqCodebook(e, iters = 2)
     val codes = assignPq(subvecs(e), cent).drop("sv")
-    val qTable = subvecs(e.where($"vec_id" < 5))
+    val qTable = subvecs(e.where(isQuery))
       .withColumn("nsv", l2Norm($"sv"))
       .join(broadcast(cent), Seq("sub"))
       .select($"vec_id".as("q_id"), $"sub", $"cid",
               l2sq($"sv", $"nsv", $"cv", $"ncv").as("d2"))
     // stage 1: compressed-domain scan — ADC over the code stream
-    val cand = codes.join(broadcast(qTable), Seq("sub", "cid"))
+    val adc = codes.join(broadcast(qTable), Seq("sub", "cid"))
       .where($"vec_id" =!= $"q_id")
       .groupBy($"q_id", $"vec_id")
       .agg(sum($"d2").as("adc"))
-      .groupBy($"q_id")
-      .agg(graft.functions.BoundedTopK
-             .boundedTopK(-$"adc", $"vec_id", shortlist).as("top"))
-      .select($"q_id", explode($"top.id").as("vec_id"))
+    val cand = topKRows(adc, Seq($"q_id"), -$"adc", $"vec_id", shortlist)
+      .select($"q_id", $"id".as("vec_id"))
     // stage 2: exact L2 refine of the shortlist only
-    val q = e.where($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"))
-    e.join(broadcast(cand.join(q, Seq("q_id"))), Seq("vec_id"))
+    val refined = fetchShortlist(e, cand, queryVecs(e))
       .withColumn("l2d", l2sq($"emb", $"nrm", $"q_emb", $"q_nrm"))
-      .groupBy($"q_id")
-      .agg(graft.functions.BoundedTopK
-             .boundedTopK(-$"l2d", $"vec_id", 10).as("top"))
-      .select($"q_id", posexplode($"top"))
-      .select($"q_id", $"col.id".as("vec_id"),
-        round(-$"col.ord", 6).as("l2d"), ($"pos" + 1).cast("int").as("rk"))
+    topKRows(refined, Seq($"q_id"), -$"l2d", $"vec_id", 10)
+      .select($"q_id", $"id".as("vec_id"), round(-$"ord", 6).as("l2d"), $"rk")
       .orderBy($"q_id", $"rk")
   }
 
-  /** MinHash signatures + banded LSH buckets over word-3-gram
-    * shingles (16 hashes, 4 bands × 4 rows). The doc-level index a
-    * petabyte dedup pipeline joins on. DuckDB-oracled since round 14:
-    * the [[graft.util.SigHash]] polynomial family replaced xxhash64
-    * (which no second engine evaluates), so the signature table is a
-    * hash-exact differential; planted-duplicate recall stays in
-    * VectorOpsSpec at the pre-re-seed thresholds. */
   /** The banded-LSH bucket ids over a signature column named `sig` —
     * ONE spelling shared by dedup_near's index dump, minhashPairs'
     * candidate join and the two streaming admission twins, so batch
@@ -958,6 +930,13 @@ object VectorOps extends QueryPack {
     s"CASE WHEN sig IS NULL THEN NULL ELSE transform(sequence(0, ${bands - 1}), " +
     s"b -> ${graft.util.SigHash.sparkBandHash("sig", "b", rows)}) END"
 
+  /** MinHash signatures + banded LSH buckets over word-3-gram
+    * shingles (16 hashes, 4 bands × 4 rows). The doc-level index a
+    * petabyte dedup pipeline joins on. DuckDB-oracled since round 14:
+    * the [[graft.util.SigHash]] polynomial family replaced xxhash64
+    * (which no second engine evaluates), so the signature table is a
+    * hash-exact differential; planted-duplicate recall stays in
+    * VectorOpsSpec at the pre-re-seed thresholds. */
   def dedupNear(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sig = minhashSignatures(t(s, dir, "documents"), nHashes = 16)
@@ -1186,28 +1165,34 @@ object VectorOps extends QueryPack {
     t(s, dir, "embeddings")
       .filter(col("embedding").isNotNull)
       .withColumn("emb", col("embedding").cast(ArrayType(DoubleType)))
-      .withColumn("mx", array_max(transform($"emb", x => abs(x))))
+      .withColumn("mx", maxAbs($"emb"))
       // mx > 0 excludes the zero vector (same contract as emb(): no
       // direction ⇒ no geometry; a zero-scale code row would score
-      // cosine 0/0 downstream). The mx === 0 branch below stays as the
-      // codegen-totality guard for the same eager-evaluation trap.
+      // cosine 0/0 downstream). The codec's mx === 0 branch stays as
+      // the codegen-totality guard for the same eager-evaluation trap.
       .filter(!isnan($"mx") && $"mx" < Double.PositiveInfinity && $"mx" > 0.0)
-      .withColumn("qvec",
-        // the leading non-finite branch makes the expression TOTAL on
-        // rows the filter above already excludes. Not dead code:
-        // InferFiltersFromGenerate pushes posexplode's implied
-        // isnotnull(qvec)/size(qvec)>0 predicates down into the SAME
-        // Filter as the front-door gate, where codegen's subexpression
-        // elimination evaluates the shared qvec CASE eagerly — before
-        // the short-circuiting AND chain — so without this branch the
-        // ANSI cast(NaN AS INT) throws on the very rows the gate
-        // rejects (observed on the round-13 non-finite world).
-        when(isnan($"mx") || $"mx" === Double.PositiveInfinity, lit(null))
-          .when($"mx" === 0.0, transform($"emb", _ => lit(0)))
-          .otherwise(transform($"emb",
-            x => round(x / $"mx" * 127).cast("int"))))
+      .withColumn("qvec", int8Codes($"emb", $"mx"))
       .select($"vec_id", $"label", $"qvec", ($"mx" / 127).as("scale"))
   }
+
+  private def maxAbs(v: Column): Column = array_max(transform(v, x => abs(x)))
+
+  /** The int8 codec of [[quantizedVecs]] and [[simSearchRerank]]:
+    * round(x/mx·127) per component of `v` at max-abs `mx`; a zero
+    * vector gets all-zero codes. */
+  private def int8Codes(v: Column, mx: Column): Column =
+    // the leading non-finite branch makes the expression TOTAL on
+    // rows quantizedVecs' filter already excludes. Not dead code:
+    // InferFiltersFromGenerate pushes posexplode's implied
+    // isnotnull(qvec)/size(qvec)>0 predicates down into the SAME
+    // Filter as the front-door gate, where codegen's subexpression
+    // elimination evaluates the shared qvec CASE eagerly — before
+    // the short-circuiting AND chain — so without this branch the
+    // ANSI cast(NaN AS INT) throws on the very rows the gate
+    // rejects (observed on the round-13 non-finite world).
+    when(isnan(mx) || mx === Double.PositiveInfinity, lit(null))
+      .when(mx === 0.0, transform(v, _ => lit(0)))
+      .otherwise(transform(v, x => round(x / mx * 127).cast("int")))
 
   def embedQuantize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1224,18 +1209,18 @@ object VectorOps extends QueryPack {
     * multiply. The integer fold is exact and order-free, so the only
     * doubles are a deterministic 3-term product per pair — the oracle
     * reproduces the identical int8 codes (embed_quantize's math) and
-    * hash-matches the ranking bit-for-bit. Top-k via the BoundedTopK
-    * heap (map-side reduction, ties to the smaller id — mirrored by
-    * the oracle's vec_id ASC), query side broadcast: the quantized
-    * corpus never shuffles. VectorOpsSpec bounds the quantized
-    * ranking's recall against exact float search. */
+    * hash-matches the ranking bit-for-bit. Top-k via [[topKRows]]
+    * (ties to the smaller id — mirrored by the oracle's vec_id ASC),
+    * query side broadcast: the quantized corpus never shuffles.
+    * VectorOpsSpec bounds the quantized ranking's recall against exact
+    * float search. */
   def simSearchQuant(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val qv = quantizedVecs(s, dir).select($"vec_id", $"qvec", $"scale")
-    val q = qv.where($"vec_id" < 5)
+    val q = qv.where(isQuery)
       .select($"vec_id".as("q_id"), $"qvec".as("q_qvec"),
               $"scale".as("q_scale"))
-    qv.crossJoin(broadcast(q))
+    val scored = qv.crossJoin(broadcast(q))
       .where($"vec_id" =!= $"q_id")
       // native codegen'd integer dot (graft.functions.IntDotProduct) —
       // exact, so bit-identical to the HOF zip_with fold, minus the
@@ -1243,11 +1228,8 @@ object VectorOps extends QueryPack {
       .withColumn("dot_i",
         graft.functions.VecFunctions.intDot($"qvec", $"q_qvec"))
       .withColumn("score", $"dot_i".cast("double") * $"scale" * $"q_scale")
-      .groupBy($"q_id")
-      .agg(graft.functions.BoundedTopK.boundedTopK($"score", $"vec_id", 10).as("top"))
-      .select($"q_id", posexplode($"top"))
-      .select($"q_id", $"col.id".as("vec_id"),
-        round($"col.ord", 6).as("score"), ($"pos" + 1).cast("int").as("rk"))
+    topKRows(scored, Seq($"q_id"), $"score", $"vec_id", 10)
+      .select($"q_id", $"id".as("vec_id"), round($"ord", 6).as("score"), $"rk")
       .orderBy($"q_id", $"rk")
   }
 
@@ -1257,13 +1239,11 @@ object VectorOps extends QueryPack {
     * [[simSearchIvf]] (2·⌈√k⌉ vs ⌈√k⌉, both over the derived
     * k = ⌈√n⌉ cell count — affordable because scoring runs on int8
     * codes via the codegen'd IntDotProduct kernel, 4× less scan I/O
-    * than float) and keeps a 50-candidate shortlist per
-    * query through the BoundedTopK heap. Stage 2 fetches the float
-    * vectors for those ≤ 50·|Q| candidates — a broadcast semi-join
-    * against the corpus, so the corpus never shuffles (on a bucketed
-    * 100 TB table the fetch also prunes files) — and re-scores them
-    * exactly, final top-10 through the same heap. Quantization error
-    * can only demote a true neighbor if it falls off a 50-deep
+    * than float) and keeps a 50-candidate shortlist per query
+    * ([[topKRows]]). Stage 2 fetches the float vectors for those
+    * ≤ 50·|Q| candidates ([[fetchShortlist]]) and re-scores them
+    * exactly, final top-10 through the same selection. Quantization
+    * error can only demote a true neighbor if it falls off a 50-deep
     * shortlist after surviving a 4-cell probe, so recall dominates
     * the raw IVF path's (bounded in VectorOpsSpec); the exact
     * re-score means reported cosines carry NO quantization error at
@@ -1295,49 +1275,31 @@ object VectorOps extends QueryPack {
     val candPerQuery = nprobe.toLong * n / math.max(kCent, 1)
     val shortlist = math.max(50, (candPerQuery / 64).toInt)
     val cent = kmeansCentroids(e, kCent, iters = 2)
-    // corpus → cell, plus int8 codes derived map-side (on a real
-    // vector store these are precomputed columns, not a join)
-    val corpus = assignCellsAuto(e, cent, kCent)
-      .withColumn("mx", array_max(transform($"emb", x => abs(x))))
-      .withColumn("qvec",
-        when($"mx" === 0.0, transform($"emb", _ => lit(0)))
-          .otherwise(transform($"emb",
-            x => round(x / $"mx" * 127).cast("int"))))
+    // int8 codes derived map-side (on a real vector store these are
+    // precomputed columns, not a join)
+    def int8(df: DataFrame): DataFrame = df
+      .withColumn("mx", maxAbs($"emb"))
+      .withColumn("qvec", int8Codes($"emb", $"mx"))
       .withColumn("scale", $"mx" / 127)
-    val q = e.where($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"))
-      .withColumn("q_mx", array_max(transform($"q_emb", x => abs(x))))
-      .withColumn("q_qvec",
-        when($"q_mx" === 0.0, transform($"q_emb", _ => lit(0)))
-          .otherwise(transform($"q_emb",
-            x => round(x / $"q_mx" * 127).cast("int"))))
-      .withColumn("q_scale", $"q_mx" / 127)
-    val wProbe = Window.partitionBy($"q_id").orderBy($"c_cos".desc, $"cent_id".asc)
-    val qCells = q.crossJoin(broadcast(cent))
-      .withColumn("c_cos", dot($"q_emb", $"c_emb") / ($"q_nrm" * $"c_nrm"))
-      .withColumn("rn", row_number().over(wProbe))
-      .where($"rn" <= nprobe)
-      .select($"q_id", $"q_qvec", $"q_scale", $"cent_id".as("cell"))
-    // stage 1: int8 scoring over the probed cells → 50-deep shortlist
-    val cand = corpus.join(broadcast(qCells), Seq("cell"))
+    // corpus → cell; queries → their nprobe closest cells
+    val corpus = int8(assignCellsAuto(e, cent, kCent))
+    val qCells = probeCells(int8(e.where(isQuery)), cent, nprobe)
+      .select($"vec_id".as("q_id"), $"qvec".as("q_qvec"),
+              $"scale".as("q_scale"), $"cell")
+    // stage 1: int8 scoring over the probed cells → shortlist
+    val coarse = corpus.join(broadcast(qCells), Seq("cell"))
       .where($"vec_id" =!= $"q_id")
       .withColumn("score_q",
         graft.functions.VecFunctions.intDot($"qvec", $"q_qvec")
           .cast("double") * $"scale" * $"q_scale")
-      .groupBy($"q_id")
-      .agg(graft.functions.BoundedTopK
-        .boundedTopK($"score_q", $"vec_id", shortlist).as("top"))
-      .select($"q_id", explode($"top.id").as("vec_id"))
-    // stage 2: fetch float vectors for the shortlist only (broadcast
-    // fetch join — the corpus side never shuffles) and re-rank EXACTLY
-    val qExact = q.select($"q_id", $"q_emb", $"q_nrm")
-    e.join(broadcast(cand.join(qExact, Seq("q_id"))), Seq("vec_id"))
-      .withColumn("cos", dot($"q_emb", $"emb") / ($"q_nrm" * $"nrm"))
-      .groupBy($"q_id")
-      .agg(graft.functions.BoundedTopK.boundedTopK($"cos", $"vec_id", 10).as("top"))
-      .select($"q_id", posexplode($"top"))
-      .select($"q_id", $"col.id".as("vec_id"),
-        round($"col.ord", 6).as("cos"), ($"pos" + 1).cast("int").as("rk"))
+    val cand = topKRows(coarse, Seq($"q_id"), $"score_q", $"vec_id", shortlist)
+      .select($"q_id", $"id".as("vec_id"))
+    // stage 2: fetch float vectors for the shortlist only and re-rank
+    // EXACTLY
+    val refined = fetchShortlist(e, cand, queryVecs(e))
+      .withColumn("cos", cosine($"q_emb", $"q_nrm", $"emb", $"nrm"))
+    topKRows(refined, Seq($"q_id"), $"cos", $"vec_id", 10)
+      .select($"q_id", $"id".as("vec_id"), round($"ord", 6).as("cos"), $"rk")
       .orderBy($"q_id", $"rk")
   }
 
@@ -1351,36 +1313,26 @@ object VectorOps extends QueryPack {
     * economics as [[simSearchRerank]], but the cheap pass saves
     * BANDWIDTH (reads a quarter of each vector — with the corpus
     * stored dim-major/chunked, 3/4 of the bytes never leave disk)
-    * rather than compute. Coarse top-50 via the BoundedTopK heap
-    * (map-side k-bounded, no corpus sort); the re-rank join touches
-    * 50 rows/query. Fully deterministic: both stages fold doubles
-    * sequentially in index order and rank with total tie-breaks, so
-    * the DuckDB window formulation hash-matches EXACTLY — unlike the
+    * rather than compute. Both stages select through [[topKRows]]; the
+    * re-rank fetch ([[fetchShortlist]]) touches 50 rows/query. Fully
+    * deterministic: both stages fold doubles sequentially in index
+    * order and rank with total tie-breaks, so the DuckDB window
+    * formulation hash-matches EXACTLY — unlike the
     * hash-bucketed ANN variants, the truncation heuristic needs no
     * recall tolerance in its oracle. */
   def simSearchMrl(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir).withColumn("pre", slice($"emb", 1, 16))
-    val q = e.where($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"emb".as("q_emb"),
-              $"nrm".as("q_nrm"), $"pre".as("q_pre"))
-    val shortlist = e.crossJoin(broadcast(q))
+    val q = queryVecs(e, $"pre".as("q_pre"))
+    val coarse = e.crossJoin(broadcast(q))
       .where($"vec_id" =!= $"q_id")
       .withColumn("cscore", dot($"q_pre", $"pre"))
-      .groupBy($"q_id")
-      .agg(graft.functions.BoundedTopK.boundedTopK($"cscore", $"vec_id", 50)
-             .as("top"))
-      .select($"q_id", explode($"top").as("c"))
-      .select($"q_id", $"c.id".as("vec_id"))
-    val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id".asc)
-    shortlist
-      .join(emb(s, dir).select($"vec_id", $"emb", $"nrm"), Seq("vec_id"))
-      .join(broadcast(q.select($"q_id", $"q_emb", $"q_nrm")), Seq("q_id"))
-      .withColumn("cos", dot($"q_emb", $"emb") / ($"q_nrm" * $"nrm"))
-      .withColumn("rk", row_number().over(w))
-      .where($"rk" <= 10)
-      .select($"q_id", $"vec_id", round($"cos", 6).as("cos"),
-              $"rk".cast("int").as("rk"))
+    val shortlist = topKRows(coarse, Seq($"q_id"), $"cscore", $"vec_id", 50)
+      .select($"q_id", $"id".as("vec_id"))
+    val refined = fetchShortlist(e, shortlist, q.drop("q_pre"))
+      .withColumn("cos", cosine($"q_emb", $"q_nrm", $"emb", $"nrm"))
+    topKRows(refined, Seq($"q_id"), $"cos", $"vec_id", 10)
+      .select($"q_id", $"id".as("vec_id"), round($"ord", 6).as("cos"), $"rk")
       .orderBy($"q_id", $"rk")
   }
 
@@ -1390,11 +1342,13 @@ object VectorOps extends QueryPack {
     * stores ship for billion-vector tiers), and retrieval ranks by
     * Hamming distance = popcount(xor) over the masks, re-scoring the
     * winners with exact cosine for display. Ranking is INTEGER
-    * (hamming asc, vec_id asc) — zero float comparisons in the
-    * selection, so the top-10 cut is deterministic by construction,
-    * and the scan is two xors + two popcounts per candidate (SIMD
-    * fodder; at 100 TB the mask table is 8 bytes/vector and the
-    * float corpus is only touched for the 10 finalists/query). Masks
+    * (hamming asc, vec_id asc), selected by [[topKRows]] on
+    * ord = −hamming — exact as a double for 0..64, ties to the smaller
+    * id as in the oracle's window — so the top-10 cut is deterministic
+    * by construction, and the scan is two xors + two popcounts per
+    * candidate (SIMD fodder; at 100 TB the mask table is 8
+    * bytes/vector). The float corpus is touched only for the 10
+    * finalists/query, through [[fetchShortlist]]. Masks
     * split 32/32 because a single 1<<63 overflows DuckDB's BIGINT
     * shift — and two-lane popcount sums identically. */
   def simSearchBitq(s: SparkSession, dir: String): DataFrame = {
@@ -1404,21 +1358,19 @@ object VectorOps extends QueryPack {
       s"(acc, i) -> acc + IF(element_at(emb, i + $lo) > CAST(0 AS DOUBLE), " +
       s"shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))")
     val e = emb(s, dir)
-      .withColumn("m1", mask(1)).withColumn("m2", mask(33))
-    val q = e.where($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"emb".as("q_emb"),
-              $"nrm".as("q_nrm"), $"m1".as("qm1"), $"m2".as("qm2"))
-    val w = Window.partitionBy($"q_id").orderBy($"hamming".asc, $"vec_id".asc)
-    e.crossJoin(broadcast(q))
+    val m = e.withColumn("m1", mask(1)).withColumn("m2", mask(33))
+    val q = queryVecs(m, $"m1".as("qm1"), $"m2".as("qm2"))
+    val scored = m.crossJoin(broadcast(q))
       .where($"vec_id" =!= $"q_id")
       .withColumn("hamming",
         (expr("bit_count(m1 ^ qm1)") + expr("bit_count(m2 ^ qm2)"))
           .cast("int"))
-      .withColumn("rk", row_number().over(w))
-      .where($"rk" <= 10)
-      .withColumn("cos", round(dot($"q_emb", $"emb") / ($"q_nrm" * $"nrm"), 6))
-      .select($"q_id", $"vec_id", $"hamming", $"cos",
-              $"rk".cast("int").as("rk"))
+    val top = topKRows(scored, Seq($"q_id"), -$"hamming", $"vec_id", 10)
+      .select($"q_id", $"id".as("vec_id"),
+              (-$"ord").cast("int").as("hamming"), $"rk")
+    fetchShortlist(e, top, q.select($"q_id", $"q_emb", $"q_nrm"))
+      .select($"q_id", $"vec_id", $"hamming",
+        round(cosine($"q_emb", $"q_nrm", $"emb", $"nrm"), 6).as("cos"), $"rk")
       .orderBy($"q_id", $"rk")
   }
 
@@ -1472,6 +1424,9 @@ object VectorOps extends QueryPack {
       .withColumn("dx", ($"g" * $"n" - $"sg").cast(dec))
       .groupBy($"vec_id", $"label", $"n")
       .agg(sum($"dx" * $"dx").as("d2x"))
+    // a window, not topKRows: the heap ranks a double ord, and two
+    // distinct decimal(38) d2x values can round to one double, which
+    // would flip a tie the exact integers break
     val w = Window.partitionBy($"label").orderBy($"d2x".desc, $"vec_id".asc)
     d2.withColumn("rk", row_number().over(w))
       .where($"rk" <= 3)

@@ -241,6 +241,24 @@ class OperatorSpec extends AnyFunSuite {
           assert(got((g, pos)) == id, s"group $g pos $pos at $parts partitions")
         }
       }
+      // the same rows through topKRows, plus a 2-row group (fewer than
+      // k: both kept) and a null-ord row in it (skipped)
+      val extra = Seq((9L, Some(2.0), 2000L), (9L, Some(1.0), 2001L),
+        (9L, None, 2002L))
+      val ranked = (rows.map { case (g, o, i) => (g, Option(o), i) } ++ extra)
+        .toDF("g", "ord", "id").repartition(parts)
+      val viaRows = graft.functions.BoundedTopK
+        .topKRows(ranked, Seq($"g"), $"ord", $"id", 3)
+        .select($"g", $"rk", $"id").as[(Long, Int, Long)].collect()
+        .groupBy(_._1).view.mapValues(_.sortBy(_._2).toSeq).toMap
+      (0L to 3L).foreach { g =>
+        val expected = (1L to 1000L).filter(_ % 4 == g).sorted.reverse.take(3)
+        assert(viaRows(g).map(_._2) == Seq(1, 2, 3),
+          s"rk not 1..k at $parts partitions")
+        assert(viaRows(g).map(_._3) == expected, s"group $g at $parts partitions")
+      }
+      assert(viaRows(9L).map(r => (r._2, r._3)) == Seq((1, 2000L), (2, 2001L)),
+        s"short group / null ord at $parts partitions: ${viaRows(9L)}")
     }
     // tie on ord → smaller id wins
     val tied = Seq((1L, 5.0, 30L), (1L, 5.0, 10L), (1L, 5.0, 20L))

@@ -74,11 +74,16 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Window"), "fell back to a window sort:\n" + p.take(800))
   }
 
-  // both reformulated onto BoundedTopK in round 6: the scored product /
-  // group rows must reduce map-side, never sort under a window
+  // every ranked list of the vector search family and the top-N-per-key
+  // aggregates goes through BoundedTopK.topKRows: the scored product /
+  // group rows (and the IVF probe cells) must reduce map-side, never
+  // sort under a window
   test("sim_search and sample_group_k select top-k via the heap aggregate, not a window") {
     Seq("sim_search", "sim_search_lsh", "sim_search_quant",
-        "sample_group_k").foreach { name =>
+        "sample_group_k", "sim_search_filtered", "sim_search_ivf",
+        "sim_search_rerank", "sim_search_pq", "sim_search_mrl",
+        "sim_search_bitq", "sim_knn_join", "sim_knn_join_ann",
+        "topk_grouped").foreach { name =>
       val p = plan(name)
       assert(p.contains("ObjectHashAggregate"), s"$name:\n" + p.take(800))
       assert(!p.contains("Window"), s"$name fell back to a window sort:\n" + p.take(800))

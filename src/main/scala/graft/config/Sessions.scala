@@ -12,6 +12,11 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session timezone (timestamp determinism vs the oracle)
   *  - GraftExtensions (SQL registration of the native expressions)
   *  - UI off (headless harness)
+  *  - `nanosAsLong`, so a TIMESTAMP(NANOS) `events.ts` reads as raw
+  *    nanos (`graft.io.Tables.events`); never flipped mid-session, as
+  *    it is part of every root's footer stamp
+  *
+  * Every temporary conf change goes through [[withConf]].
   */
 object Sessions {
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
@@ -21,6 +26,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -56,29 +62,35 @@ object Sessions {
                  2L * s.sparkContext.defaultParallelism).toInt
       }
 
+  /** The one conf scope: run `f` with each `k -> v` set on `s`, then
+    * put each key back exactly: its old value if it was explicitly set
+    * (in `s.conf.getAll`), else unset, not pinned to its default. The
+    * action that needs the conf must run inside `f`: Spark reads most
+    * confs when a plan is built or executed.
+    *
+    * The set/restore pair is synchronized on the session so concurrent
+    * callers can't interleave restores; `f` itself runs single-threaded
+    * by design (Verify/Bench/tests all drive queries sequentially). */
+  def withConf[T](s: SparkSession, kv: (String, String)*)(f: => T): T =
+    s.synchronized {
+      val set = s.conf.getAll
+      kv.foreach { case (k, v) => s.conf.set(k, v) }
+      try f finally kv.foreach { case (k, _) =>
+        set.get(k).fold(s.conf.unset(k))(s.conf.set(k, _))
+      }
+    }
+
   /** The one shuffle-width scope: run `f` with
     * `spark.sql.shuffle.partitions` set to the graft conf `conf` when
     * it is set (a named conf is a deployment decision and is applied
     * exactly, even above the session's shuffle setting); otherwise to
-    * `derive(current session width)`, or unscoped when that is `None`.
-    * The previous width is restored on exit.
-    *
-    * Mutates shared session conf: the set/restore pair is synchronized
-    * on the session so concurrent callers can't interleave restores,
-    * but `f` itself runs single-threaded by design (Verify/Bench/tests
-    * all drive queries sequentially). */
+    * `derive(current session width)`, or unscoped when that is `None`. */
   private def withShuffleWidth[T](s: SparkSession, conf: String)(
-      derive: Int => Option[Int])(f: => T): T =
-    s.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = s.conf.get(key)
-      s.conf.getOption(conf).map(_.toInt).orElse(derive(prev.toInt)) match {
-        case Some(n) =>
-          s.conf.set(key, n.toString)
-          try f finally s.conf.set(key, prev)
-        case None => f
-      }
-    }
+      derive: Int => Option[Int])(f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    s.conf.getOption(conf).map(_.toInt).orElse(derive(s.conf.get(key).toInt))
+      .fold(f)(n => withConf(s, key -> n.toString)(f))
+  }
 
   /** Scope a STREAMING query start to its state-store partition
     * count: `spark.graft.stream.statePartitions`, when explicitly

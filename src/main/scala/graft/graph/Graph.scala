@@ -217,59 +217,59 @@ object Graph {
         // corpus-scale (wants real parallelism), the tail passes run
         // on a few-10k-edge remnant (want few partitions); a single
         // loop-wide constant is wrong at one end or the other. The
-        // conf is read at each pass's action, so setting it here
-        // rescopes only this pass's shuffles.
-        e.sparkSession.conf.set("spark.sql.shuffle.partitions",
-          graft.config.Sessions.graphIterPartitions(e.sparkSession, nE)
-            .toString)
-        // large-star: symmetrize, m = min(neighborhood ∪ self), link
-        // every LARGER neighbor v > u to m (m ≤ u < v keeps it
-        // canonical and self-loop-free). The per-node neighborhood min
-        // is a HASH AGGREGATE joined back onto the edge stream — not a
-        // window — for three scale reasons (r15, guide §2.3/§2.5):
-        // partial aggregation means only per-partition (u, min) rows
-        // cross the agg shuffle instead of the whole symmetrized edge
-        // set entering a window SORT; the join back is equi-keyed, so
-        // AQE's skew-join splitting covers a hub vertex (windows have
-        // no skew handling — one 10⁶-degree hub previously meant one
-        // task sorting its whole partition); and at toy/mid scale AQE
-        // broadcasts the vertex-sized min table outright. Measured at
-        // sf0.1: pass-0 contraction 2.07 s → 1.17 s warm, same output
-        // (the dedup_clusters_star differential and PropertySpec's
-        // star ≡ min-label ≡ closure equivalences pin it).
-        val sym = e.select(col("a").as("u"), col("b").as("v"))
-          .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-        val nbrMin = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        // the probe side is the CANONICAL edge set, not sym: a sym row
-        // survives `v > u` exactly when u is the smaller endpoint, i.e.
-        // once per canonical (a > b) edge with u = b, v = a — so
-        // probing e directly halves the join's scan and emits the
-        // identical row set (r15)
-        val ls = e.join(nbrMin, col("b") === col("u"))
-          .select(col("a"), least(col("mn"), col("b")).as("b"))
-          .distinct()
-        // small-star: group by the larger endpoint, m = min of its
-        // smaller neighbors; re-link them and the node itself to m
-        // (same hash-agg + join shape as large-star, same rationale)
-        val sMin = ls.groupBy(col("a")).agg(min(col("b")).as("m"))
-        val sm = ls.join(sMin, "a")
-        val ss = sm.where(col("b") =!= col("m"))
-          .select(col("b").as("a"), col("m").as("b"))
-          .unionByName(sm.select(col("a"), col("m").as("b")))
-          .distinct()
-          // lazy: the sig() action below materializes the blocks in
-          // the same job that computes them — one job per pass, not
-          // an eager-checkpoint job plus a sig scan (r15)
-          .localCheckpoint(false)
-        val t0 = System.nanoTime()
-        val (nSS, nDistA) = sig(ss)
-        converged = nSS == 0L || isStarForest(ss, nSS, nDistA)
-        dbg(f"star pass=$pass edges=$nE%d -> $nSS%d converged=$converged " +
-            f"contractSec=${(t0 - tPass) / 1e9}%.2f " +
-            f"sigCertSec=${(System.nanoTime() - t0) / 1e9}%.2f")
-        e = ss
-        nE = nSS
-        pass += 1
+        // conf is read at each pass's actions, which all run inside
+        // this scope, so it rescopes only this pass's shuffles.
+        graft.config.Sessions.withConf(e.sparkSession, "spark.sql.shuffle.partitions" ->
+            graft.config.Sessions.graphIterPartitions(e.sparkSession, nE).toString) {
+          // large-star: symmetrize, m = min(neighborhood ∪ self), link
+          // every LARGER neighbor v > u to m (m ≤ u < v keeps it
+          // canonical and self-loop-free). The per-node neighborhood min
+          // is a HASH AGGREGATE joined back onto the edge stream — not a
+          // window — for three scale reasons (r15, guide §2.3/§2.5):
+          // partial aggregation means only per-partition (u, min) rows
+          // cross the agg shuffle instead of the whole symmetrized edge
+          // set entering a window SORT; the join back is equi-keyed, so
+          // AQE's skew-join splitting covers a hub vertex (windows have
+          // no skew handling — one 10⁶-degree hub previously meant one
+          // task sorting its whole partition); and at toy/mid scale AQE
+          // broadcasts the vertex-sized min table outright. Measured at
+          // sf0.1: pass-0 contraction 2.07 s → 1.17 s warm, same output
+          // (the dedup_clusters_star differential and PropertySpec's
+          // star ≡ min-label ≡ closure equivalences pin it).
+          val sym = e.select(col("a").as("u"), col("b").as("v"))
+            .unionByName(e.select(col("b").as("u"), col("a").as("v")))
+          val nbrMin = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
+          // the probe side is the CANONICAL edge set, not sym: a sym row
+          // survives `v > u` exactly when u is the smaller endpoint, i.e.
+          // once per canonical (a > b) edge with u = b, v = a — so
+          // probing e directly halves the join's scan and emits the
+          // identical row set (r15)
+          val ls = e.join(nbrMin, col("b") === col("u"))
+            .select(col("a"), least(col("mn"), col("b")).as("b"))
+            .distinct()
+          // small-star: group by the larger endpoint, m = min of its
+          // smaller neighbors; re-link them and the node itself to m
+          // (same hash-agg + join shape as large-star, same rationale)
+          val sMin = ls.groupBy(col("a")).agg(min(col("b")).as("m"))
+          val sm = ls.join(sMin, "a")
+          val ss = sm.where(col("b") =!= col("m"))
+            .select(col("b").as("a"), col("m").as("b"))
+            .unionByName(sm.select(col("a"), col("m").as("b")))
+            .distinct()
+            // lazy: the sig() action below materializes the blocks in
+            // the same job that computes them — one job per pass, not
+            // an eager-checkpoint job plus a sig scan (r15)
+            .localCheckpoint(false)
+          val t0 = System.nanoTime()
+          val (nSS, nDistA) = sig(ss)
+          converged = nSS == 0L || isStarForest(ss, nSS, nDistA)
+          dbg(f"star pass=$pass edges=$nE%d -> $nSS%d converged=$converged " +
+              f"contractSec=${(t0 - tPass) / 1e9}%.2f " +
+              f"sigCertSec=${(System.nanoTime() - t0) / 1e9}%.2f")
+          e = ss
+          nE = nSS
+          pass += 1
+        }
       }
       require(converged,
         s"connectedComponentsStar did not converge within $maxPasses " +

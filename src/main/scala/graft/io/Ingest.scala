@@ -190,13 +190,9 @@ object Ingest extends QueryPack {
       .write.mode("overwrite").partitionBy("day").parquet(path)
     // 2. late data lands for the tail of the range: recompute ONLY
     //    days >= cutoff and dynamic-overwrite those partitions
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try rollup(ev).where($"day" >= lit(cutoff).cast("date"))
-      .write.mode("overwrite").partitionBy("day").parquet(path)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    graft.config.Sessions.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      rollup(ev).where($"day" >= lit(cutoff).cast("date"))
+        .write.mode("overwrite").partitionBy("day").parquet(path)
     }
     // explicit schema: plan-derived, no execution; see ingestPartitioned
     s.read.schema(rollup(ev).schema).parquet(path)
@@ -211,9 +207,10 @@ object Ingest extends QueryPack {
     * join's distribution requirement at scan time. This is the single
     * biggest 100 TB lever this engine exposes: bucket the fact tables
     * once at ingestion and every subsequent join/agg on that key is
-    * shuffle-free forever. (Broadcast is disabled for the probe so the
-    * plan demonstrably stays a zero-Exchange sort-merge join; the
-    * IngestSpec asserts no Exchange in the executed plan.) */
+    * shuffle-free forever. (A `merge` hint keeps the join a sort-merge
+    * join even where stats would broadcast a side at toy scale, so the
+    * plan demonstrably has no Exchange below the join; IngestSpec
+    * asserts that on this query's own executed plan.) */
   def ingestBucketed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
@@ -258,15 +255,11 @@ object Ingest extends QueryPack {
         .write.mode("overwrite").bucketBy(8, "l_orderkey")
         .sortBy("l_orderkey").saveAsTable(tl)
     }
-    val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      s.table(to).join(s.table(tl), $"o_orderkey" === $"l_orderkey")
-        .groupBy($"o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-             sumMoney($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("revenue"))
-        .orderBy($"o_orderstatus")
-    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    s.table(to).join(s.table(tl).hint("merge"), $"o_orderkey" === $"l_orderkey")
+      .groupBy($"o_orderstatus")
+      .agg(count(lit(1)).as("n"),
+           sumMoney($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("revenue"))
+      .orderBy($"o_orderstatus")
   }
 
   /** parquet → ORC → filtered read-back: the second columnar storage

@@ -123,7 +123,8 @@ object Tables {
   /** `events.ts` has shipped in two parquet flavors across fixture
     * generations: TIMESTAMP(NANOS) — which Spark's reader rejects
     * outright (PARQUET_TYPE_ILLEGAL) unless read as raw nanos via
-    * `nanosAsLong` and truncated to microseconds — and plain
+    * `nanosAsLong` (a session requirement `Sessions.local` declares;
+    * this read never sets it) and truncated to microseconds — and plain
     * TIMESTAMP(MICROS). Adapt on the observed footer type: a LongType
     * `ts` is raw nanos (integer `div` keeps the math exact; ns epochs
     * exceed 2^53, so a double division would corrupt low bits), a
@@ -133,7 +134,6 @@ object Tables {
     * NTZ cast is value-preserving either way). */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = parquet(spark, s"$dir/events.parquet")
     val ts =
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)

@@ -238,12 +238,8 @@ object Pipelines extends QueryPack {
       .where($"op".isNull || $"op" =!= "D")
       .select($"key", coalesce($"new_cents", $"bal_cents").as("bal_cents"),
               $"seg")
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("seg").parquet(path)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    graft.config.Sessions.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      merged.write.mode("overwrite").partitionBy("seg").parquet(path)
     }
   }
 

@@ -112,7 +112,6 @@ object Streams extends QueryPack {
       StructField("props", StringType)))
 
   private def eventStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the fixture's ts flavor varies by generation (raw-nanos LONG vs
     // native TIMESTAMP(MICROS) — see graft.io.Tables.events); a file
     // stream needs an explicit schema, so take the footer type from the
@@ -460,25 +459,20 @@ object Streams extends QueryPack {
     * differential also pins the two state APIs EQUAL to each other. */
   def streamTws(s: SparkSession, dir: String): DataFrame =
     graft.config.Sessions.withStreamStatePartitions(s) {
+    graft.config.Sessions.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
     import s.implicits._
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val typed = replayStream(s, eventReplayStage(s, dir))
-        .where($"value".isNotNull) // see streamStateful: encoder contract
-        .select($"user_id", $"us",
-                (round($"value" * 100)).cast("long").as("cents"))
-        .as[(Long, Long, Long)]
-      val out = typed.groupByKey(_._1)
-        .mapValues(r => (r._2, r._3))
-        .transformWithState(new UserRollupProcessor,
-          TimeMode.None(), OutputMode.Update())
-      lastUserVersion(
-        drain(out.toDF(), "graft_stream_tws", OutputMode.Update()))
-    } finally prev match {
-      case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val typed = replayStream(s, eventReplayStage(s, dir))
+      .where($"value".isNotNull) // see streamStateful: encoder contract
+      .select($"user_id", $"us",
+              (round($"value" * 100)).cast("long").as("cents"))
+      .as[(Long, Long, Long)]
+    val out = typed.groupByKey(_._1)
+      .mapValues(r => (r._2, r._3))
+      .transformWithState(new UserRollupProcessor,
+        TimeMode.None(), OutputMode.Update())
+    lastUserVersion(
+      drain(out.toDF(), "graft_stream_tws", OutputMode.Update()))
     }
     }
 

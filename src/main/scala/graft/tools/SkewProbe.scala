@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.config.Sessions.withConf
 import graft.util.Det._
 
 /** Join-skew measurement probe (dev tool, not part of the query
@@ -85,15 +86,6 @@ object SkewProbe {
       .groupBy($"c_mktsegment")
       .agg(count(lit(1)).as("n_events"), sumMoney($"value").as("val_sum"))
       .orderBy($"c_mktsegment")
-  }
-
-  private def withConf[T](s: SparkSession, kv: (String, String)*)(f: => T): T = {
-    val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
   }
 
   // skew thresholds scaled local-world-sized (hot partition ~10-100 MB

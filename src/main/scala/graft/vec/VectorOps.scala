@@ -1236,15 +1236,16 @@ object VectorOps extends QueryPack {
   /** Two-stage ANN — the production retrieval shape: a CHEAP coarse
     * stage casts a wide net, an EXACT stage re-ranks only the
     * shortlist. Stage 1 probes twice as many IVF cells as
-    * [[simSearchIvf]] (2·⌈√k⌉ vs ⌈√k⌉, both over the derived
-    * k = ⌈√n⌉ cell count — affordable because scoring runs on int8
-    * codes via the codegen'd IntDotProduct kernel, 4× less scan I/O
-    * than float) and keeps a 50-candidate shortlist per query
-    * ([[topKRows]]). Stage 2 fetches the float vectors for those
-    * ≤ 50·|Q| candidates ([[fetchShortlist]]) and re-scores them
-    * exactly, final top-10 through the same selection. Quantization
-    * error can only demote a true neighbor if it falls off a 50-deep
-    * shortlist after surviving a 4-cell probe, so recall dominates
+    * [[simSearchIvf]] (min(k, 2·[[ivfNprobe]]) over the derived
+    * k = ⌈√n⌉ cell count, floored at 16 — affordable because scoring
+    * runs on int8 codes via the codegen'd IntDotProduct kernel, 4× less
+    * scan I/O than float) and keeps a shortlist per query
+    * ([[topKRows]]) of max(50, candidates/64), where candidates is the
+    * probed cells' expected pool, nprobe·n/k. Stage 2 fetches the float
+    * vectors for those shortlisted candidates ([[fetchShortlist]]) and
+    * re-scores them exactly, final top-10 through the same selection.
+    * Quantization error can only demote a true neighbor if it falls
+    * off the shortlist after surviving the probe, so recall dominates
     * the raw IVF path's (bounded in VectorOpsSpec); the exact
     * re-score means reported cosines carry NO quantization error at
     * all. No oracle (k-means cells); cos parity + recall floor in

@@ -19,21 +19,9 @@ class ExprParitySpec extends AnyFunSuite {
 
   private def bothPaths[T](run: () => T): (T, T) = {
     val withCodegen = run()
-    val ws = "spark.sql.codegen.wholeStage"
-    val fm = "spark.sql.codegen.factoryMode"
-    val prevWs = spark.conf.get(ws)
-    val prevFm = spark.conf.getOption(fm)
-    spark.conf.set(ws, "false")
-    spark.conf.set(fm, "NO_CODEGEN")
-    val interpreted =
-      try run()
-      finally {
-        spark.conf.set(ws, prevWs)
-        prevFm match {
-          case Some(v) => spark.conf.set(fm, v)
-          case None    => spark.conf.unset(fm)
-        }
-      }
+    val interpreted = graft.config.Sessions.withConf(spark,
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(run())
     (withCodegen, interpreted)
   }
 
@@ -108,14 +96,11 @@ class ExprParitySpec extends AnyFunSuite {
   // round-robin 13 = group rows scattered, max merge fan-in) crossed with
   // both aggregate exec paths, and asserts the results agree.
 
-  private def aggExecPaths[T](run: () => T): Seq[T] = {
-    val key = "spark.sql.execution.useObjectHashAggregateExec"
-    val prev = spark.conf.get(key)
-    try Seq(
-      { spark.conf.set(key, "true"); run() },
-      { spark.conf.set(key, "false"); run() } // SortAggregate fallback
-    ) finally spark.conf.set(key, prev)
-  }
+  private def aggExecPaths[T](run: () => T): Seq[T] =
+    Seq("true", "false").map { v => // false: the SortAggregate fallback
+      graft.config.Sessions.withConf(spark,
+        "spark.sql.execution.useObjectHashAggregateExec" -> v)(run())
+    }
 
   private def partitionings(df: org.apache.spark.sql.DataFrame, key: String)
       : Seq[org.apache.spark.sql.DataFrame] =

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io.{Ingest, Tables}
@@ -49,23 +53,23 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join with zero exchanges") {
-    // ensure the bucketed tables exist (query builds them on demand)
-    Ingest.ingestBucketed(spark, SparkSpec.sfDir).count()
-    val tag = SparkSpec.sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val j = spark.table(s"graft_b_orders_$tag")
-        .join(spark.table(s"graft_b_lineitem_$tag"), $"o_orderkey" === $"l_orderkey")
-      val plan = j.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), plan.take(1200))
-      assert(plan.contains("SortMergeJoin"), plan.take(400))
-      // and it computes the same rows as the unbucketed join
-      val expect = graft.io.Tables.t(spark, SparkSpec.sfDir, "orders")
-        .join(graft.io.Tables.t(spark, SparkSpec.sfDir, "lineitem"),
-              $"o_orderkey" === $"l_orderkey").count()
-      assert(j.count() == expect)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // the query's own executed (final adaptive) plan, in the session's
+    // own conf: a sort-merge join of two bucketed scans, no Exchange below
+    val q = Ingest.ingestBucketed(spark, SparkSpec.sfDir)
+    val rows = q.collect()
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val plan = q.queryExecution.executedPlan
+    assert(aqe.collect(plan) { case j: BroadcastHashJoinExec => j }.isEmpty, plan)
+    val smj = aqe.collect(plan) { case j: SortMergeJoinExec => j }
+    assert(smj.size == 1, plan)
+    assert(aqe.collect(smj.head) { case x: Exchange => x }.isEmpty, smj.head)
+    val scans = aqe.collect(smj.head) { case f: FileSourceScanExec => f }
+    assert(scans.size == 2 && scans.forall(_.bucketedScan), smj.head)
+    // and it joins the same rows as the unbucketed join
+    val expect = Tables.t(spark, SparkSpec.sfDir, "orders")
+      .join(Tables.t(spark, SparkSpec.sfDir, "lineitem"),
+            $"o_orderkey" === $"l_orderkey").count()
+    assert(rows.map(_.getAs[Long]("n")).sum == expect)
   }
 
   test("partitioned sink: filter becomes a PartitionFilter, not a scan filter") {

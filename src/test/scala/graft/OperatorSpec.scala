@@ -615,17 +615,17 @@ class OperatorSpec extends AnyFunSuite {
     // a 100 TB edge set clamps at 2x parallelism, not unbounded
     assert(Sessions.graphIterPartitions(spark, 10000000000L) == 2 * par)
     // explicit conf wins outright
-    spark.conf.set("spark.graft.graph.iterPartitions", "17")
-    try assert(Sessions.graphIterPartitions(spark, 10000000000L) == 17)
-    finally spark.conf.unset("spark.graft.graph.iterPartitions")
+    Sessions.withConf(spark, "spark.graft.graph.iterPartitions" -> "17") {
+      assert(Sessions.graphIterPartitions(spark, 10000000000L) == 17)
+    }
   }
 
   test("streamStatePartitions: named conf with local default 4") {
     import graft.config.Sessions
     assert(Sessions.streamStatePartitions(spark) == 4)
-    spark.conf.set("spark.graft.stream.statePartitions", "12")
-    try assert(Sessions.streamStatePartitions(spark) == 12)
-    finally spark.conf.unset("spark.graft.stream.statePartitions")
+    Sessions.withConf(spark, "spark.graft.stream.statePartitions" -> "12") {
+      assert(Sessions.streamStatePartitions(spark) == 12)
+    }
   }
 
   test("releaseQueryStorage sweeps cached plans + persisted RDDs; session stays usable for new work") {
@@ -663,16 +663,16 @@ class OperatorSpec extends AnyFunSuite {
     // deployment override contract (round-11 advice: the min-cap was
     // silently swallowing it)
     val big = sessionN + 100
-    spark.conf.set("spark.graft.stream.statePartitions", big.toString)
-    try assert(Sessions.withStreamStatePartitions(spark) {
-      spark.conf.get(key).toInt
-    } == big)
-    finally spark.conf.unset("spark.graft.stream.statePartitions")
-    spark.conf.set("spark.graft.graph.iterPartitions", (sessionN + 50).toString)
-    try assert(Sessions.withGraphIterPartitions(spark, 0L) {
-      spark.conf.get(key).toInt
-    } == sessionN + 50)
-    finally spark.conf.unset("spark.graft.graph.iterPartitions")
+    Sessions.withConf(spark, "spark.graft.stream.statePartitions" -> big.toString) {
+      assert(Sessions.withStreamStatePartitions(spark) {
+        spark.conf.get(key).toInt
+      } == big)
+    }
+    Sessions.withConf(spark, "spark.graft.graph.iterPartitions" -> (sessionN + 50).toString) {
+      assert(Sessions.withGraphIterPartitions(spark, 0L) {
+        spark.conf.get(key).toInt
+      } == sessionN + 50)
+    }
     // pair-agg: the explicit conf beats the derivation; without it a
     // large estimate RAISES the width, and no estimate (estRows <= 0)
     // leaves the session width untouched
@@ -681,14 +681,31 @@ class OperatorSpec extends AnyFunSuite {
         spark.conf.get(key).toInt
       }
     val bigEst = 524288L * (sessionN + 100)
-    spark.conf.set("spark.graft.graph.pairAggPartitions", (sessionN + 7).toString)
-    try assert(pairWidth(bigEst) == sessionN + 7)
-    finally spark.conf.unset("spark.graft.graph.pairAggPartitions")
+    Sessions.withConf(spark, "spark.graft.graph.pairAggPartitions" -> (sessionN + 7).toString) {
+      assert(pairWidth(bigEst) == sessionN + 7)
+    }
     assert(pairWidth(bigEst) == sessionN + 101)
     assert(pairWidth(0L) == sessionN)
     assert(pairWidth(-1L) == sessionN)
     // and every scope restores the session value on exit
     assert(spark.conf.get(key).toInt == sessionN)
+  }
+
+  test("withConf puts each key back exactly: an explicit value is restored, a defaulted key is unset again, also on a throw") {
+    import graft.config.Sessions
+    val s = spark.newSession()
+    // set explicitly by Sessions.local vs registered with a default
+    val (set, dflt) = ("spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold")
+    val before = s.conf.getAll
+    assert(before.contains(set) && !before.contains(dflt) && s.conf.getOption(dflt).nonEmpty)
+    Sessions.withConf(s, set -> "3", dflt -> "-1") {
+      assert(s.conf.get(set) == "3" && s.conf.get(dflt) == "-1")
+    }
+    assert(s.conf.getAll == before)
+    intercept[IllegalStateException](Sessions.withConf(s, set -> "5", dflt -> "-1") {
+      throw new IllegalStateException("inside the scope")
+    })
+    assert(s.conf.getAll == before)
   }
 
   test("corpus-derived scale dials: fuzzy blocking prefix, pair-agg width, IVF probe width") {

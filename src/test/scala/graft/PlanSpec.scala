@@ -476,9 +476,7 @@ class PlanSpec extends AnyFunSuite {
       // runtime byte sizes — pin it off so the description is stable
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    graft.config.Sessions.withConf(spark, confs: _*) {
       // hot key 0 carries half the left side → one shuffle partition
       // ~30× the median. The payload is xxhash64 noise so lz4 can't
       // compress the hot partition back under the detector threshold.
@@ -503,9 +501,6 @@ class PlanSpec extends AnyFunSuite {
       // not the exact phrasing
       assert("AQEShuffleRead [^\\n]*skewed".r.findFirstIn(finalPlan).isDefined,
         s"AQE did not split the skewed partition:\n${finalPlan.take(1500)}")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

@@ -339,9 +339,7 @@ class PropertySpec extends AnyFunSuite {
     // BroadcastHashJoin (hints override the threshold), so its absence
     // proves the gate removed the hint — Spark's cost-based planner
     // remains free to broadcast when runtime stats say it fits.
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    graft.config.Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val partPlan = graft.graph.Graph.pagerank(edges, 2, 0.85,
           broadcastMaxVertices = 0L)
         .queryExecution.executedPlan.toString
@@ -351,7 +349,7 @@ class PropertySpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString
       assert(bcastPlan.contains("BroadcastHashJoin"),
         "broadcast-path hint went missing")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
+    }
   }
 
   test("triangle estimator: exact mode equals brute force; sampling is a sub-count") {

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every declared query must run at sf0.001; the driver contract
-  * additionally smoke-checks entry() for rows > 0. */
+/** Every declared query must run at sf0.001 and leave the session's
+  * conf unchanged; the entry-point contract additionally
+  * smoke-checks entry() for rows > 0. */
 class QueriesSmokeSpec extends AnyFunSuite {
   lazy val spark = SparkSpec.session
 
@@ -26,8 +27,12 @@ class QueriesSmokeSpec extends AnyFunSuite {
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs at sf0.001") {
+      // a query leaves its session's conf as it found it
+      val before = spark.conf.getAll.toSet
       val n = fn(spark, SparkSpec.sfDir).count()
       assert(n >= 0)
+      val after = spark.conf.getAll.toSet
+      assert((after diff before).isEmpty && (before diff after).isEmpty)
     }
   }
 }

@@ -40,20 +40,17 @@ class StreamsSpec extends AnyFunSuite {
 
   test("state TTL: a key idle past the TTL restarts its count from zero") {
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // 4.1's checkpoint file-checksum writer deadlocks closing the
     // RocksDB zip when TTL secondary-index files multiply the
     // checkpoint file count (tasks park forever in
     // ChecksumCancellableFSDataOutputStream.close); the feature is
     // orthogonal to what this test verifies, so switch it off here
-    val prevCk = spark.conf.getOption(
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled")
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    val prevParts = spark.conf.getOption("spark.graft.stream.statePartitions")
-    spark.conf.set("spark.graft.stream.statePartitions", "2")
-    try graft.config.Sessions.withStreamStatePartitions(spark) {
+    graft.config.Sessions.withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+      "spark.graft.stream.statePartitions" -> "2") {
+    graft.config.Sessions.withStreamStatePartitions(spark) {
       implicit val sqlCtx = spark.sqlContext
       // ProcessingTime mode keeps scheduling eviction micro-batches
       // forever (even under AvailableNow — observed 100+ empty batches
@@ -107,19 +104,7 @@ class StreamsSpec extends AnyFunSuite {
       memShort.addData(1L)
       assert(runShort() == Seq(1L),
         "short-TTL batch 2: state expired, count restarts at 1")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      prevCk match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", p)
-        case None => spark.conf.unset("spark.sql.streaming.checkpoint.fileChecksum.enabled")
-      }
-      prevParts match {
-        case Some(p) => spark.conf.set("spark.graft.stream.statePartitions", p)
-        case None => spark.conf.unset("spark.graft.stream.statePartitions")
-      }
+    }
     }
   }
 

@@ -130,24 +130,22 @@ class TablesSpec extends AnyFunSuite {
       .append("event_id", 1L).append("ts", nanos))
     finally w.close()
 
+    // Sessions.local declares the conf once for the whole session
     val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "true")
-      assert(Tables.parquet(spark, s"$dir/events.parquet").schema("ts").dataType == LongType)
-      spark.conf.set(key, "false")
-      val err = intercept[Exception](Tables.parquet(spark, s"$dir/events.parquet"))
-      assert(err.getMessage.contains("PARQUET_TYPE_ILLEGAL") ||
-             err.getMessage.contains("TIMESTAMP(NANOS"), err.getMessage)
-      // events() sets the conf back on and must not see a stale entry
-      val ev = Tables.events(spark, dir)
-      assert(ev.schema("ts").dataType == TimestampNTZType)
-      assert(ev.selectExpr("unix_micros(cast(ts as timestamp))").as[Long].collect().toSeq ==
-        Seq(nanos / 1000))
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    assert(spark.conf.getAll.get(key).contains("true"))
+    assert(Tables.parquet(spark, s"$dir/events.parquet").schema("ts").dataType == LongType)
+    // a session without it fails loudly on the NANOS footer; events()
+    // never sets the conf itself
+    val bare = spark.newSession()
+    bare.conf.unset(key)
+    val err = intercept[Exception](Tables.events(bare, dir))
+    assert(err.getMessage.contains("PARQUET_TYPE_ILLEGAL"), err.getMessage)
+    assert(!bare.conf.getAll.contains(key))
+    // with the conf on, the file reads as micros, not a stale entry
+    val ev = Tables.events(spark, dir)
+    assert(ev.schema("ts").dataType == TimestampNTZType)
+    assert(ev.selectExpr("unix_micros(cast(ts as timestamp))").as[Long].collect().toSeq ==
+      Seq(nanos / 1000))
   }
 
   test("two reads of one table self-join unambiguously, as the uncached read does") {
@@ -226,9 +224,16 @@ class TablesSpec extends AnyFunSuite {
     assert(viewCommandsDuring(spark)(Tables.view(spark, dir, "nation")) == 0)
   }
 
+  test("reading events in a fresh session leaves a memoised TPC-H footer valid") {
+    val fresh = spark.newSession()
+    Tables.t(fresh, SparkSpec.sfDir, "nation")
+    Tables.events(fresh, SparkSpec.sfDir)
+    assert(jobsDuring(Tables.t(fresh, SparkSpec.sfDir, "nation")) == 0)
+  }
+
   test("building sql_tpch_q21 after sql_tpch_q5 in a fresh session submits no job") {
-    // only the TPC-H views register, so no events read flips nanosAsLong
-    // between the two builds and re-stamps every root
+    // the session declares nanosAsLong up front and no read flips it,
+    // so q5's registrations keep their stamps for q21
     val fresh = spark.newSession()
     val q = graft.sql.SqlQueries.queries
     q("sql_tpch_q5")(fresh, SparkSpec.sfDir)

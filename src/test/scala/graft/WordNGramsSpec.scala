@@ -101,10 +101,8 @@ class WordNGramsSpec extends AnyFunSuite {
       .select($"doc_id", graft.functions.TextFunctions.wordNGrams($"text", 3).as("sh"))
       .as[(Long, String)].collect().sorted
     val withCodegen = run()
-    val key = "spark.sql.codegen.wholeStage"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    val interpreted = try run() finally spark.conf.set(key, prev)
+    val interpreted = graft.config.Sessions.withConf(spark,
+      "spark.sql.codegen.wholeStage" -> "false")(run())
     assert(withCodegen.sameElements(interpreted),
       "interpreted GenerateExec diverged from the codegen path")
     assert(withCodegen.nonEmpty)

@@ -28,6 +28,13 @@ cd "$(dirname "$0")/.."
 
 FAST=${1:-}
 
+# every temporary conf change goes through graft.config.Sessions.withConf,
+# which puts each key back exactly, so no query leaves its session changed
+echo "== gate: session conf set only in config/Sessions.scala =="
+if grep -rnE '\.conf\.(set|unset)\(' src/main/scala | grep -v '^src/main/scala/graft/config/Sessions.scala:'; then
+  echo "GATE FAIL: scope a conf change with graft.config.Sessions.withConf"; exit 1
+fi
+
 echo "== gate: compile (main + test) =="
 sbt -batch Test/compile > /tmp/gate_compile.log 2>&1 \
   || { tail -30 /tmp/gate_compile.log; echo "GATE FAIL: compile"; exit 1; }

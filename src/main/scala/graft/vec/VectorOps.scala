@@ -1,9 +1,10 @@
 package graft.vec
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 import graft.QueryPack
 import graft.functions.BoundedTopK.topKRows
 import graft.functions.VecFunctions.{dotProduct, l2Norm}
@@ -427,17 +428,21 @@ object VectorOps extends QueryPack {
   private def lloydSeeds(e: DataFrame, k: Int): DataFrame =
     e.orderBy(pmod(col("vec_id"), lit(100)), col("vec_id")).limit(k)
 
-  /** Lloyd's k-means as relational operators — the one loop behind
-    * [[kmeansCentroids]], [[gridLloyd]] and [[pqCodebook]]. Each of
-    * `iters` passes runs `assign` on the current centroid table (one
-    * corpus scan against broadcast centroids — the corpus never
-    * shuffles), which must yield the centroid key columns `keys` and
-    * the member vector `vec`; then a per-dimension `mean` over
-    * posexplode'd coordinates grouped on (keys, d), and an
-    * `array_sort(collect_list)` rebuild of each centroid as an array
-    * column `c` next to its keys, which `out` turns back into the
-    * table `assign` reads (column names, norms, pins). Starts from
-    * `seeds`, already in that table's shape.
+  /** Lloyd's k-means with the model held on the driver — the one loop
+    * behind [[kmeansCentroids]], [[gridLloyd]] and [[pqCodebook]], as
+    * MLlib's `KMeans` holds its centers. Each of `iters` passes runs
+    * `assign` on the current centroid table (one corpus scan), which
+    * must yield the centroid key columns `keys` and the member vector
+    * `vec`; then a per-dimension `mean` over posexplode'd coordinates
+    * grouped on (keys, d). Those k×dim rows are collected, and each
+    * centroid is rebuilt on the driver as an array column `c` (sorted
+    * by d) next to its keys, in a local relation that `out` turns back
+    * into the table `assign` reads (column names, norms). Starts from
+    * `seeds`, already in that table's shape. A pass is one corpus scan
+    * plus one model-sized aggregate: no pin, and no second aggregate
+    * to rebuild the arrays. The driver holds k·dim values between
+    * passes, the same values every broadcast of the table collects
+    * there anyway.
     *
     * The (keys, d) aggregate is partial-aggregated, so the exchange
     * carries only k×dim model-sized partials. NOTE (r16): a
@@ -451,23 +456,27 @@ object VectorOps extends QueryPack {
       assign: DataFrame => DataFrame,
       out: DataFrame => DataFrame): DataFrame = {
     val ks = keys.map(col)
+    val nk = keys.size
     (1 to iters).foldLeft(seeds) { (cent, _) =>
-      out(assign(cent)
+      val means = assign(cent)
         .select(ks :+ posexplode(col(vec)).as(Seq("d", "x")): _*)
         .groupBy(ks :+ col("d"): _*)
         .agg(mean(col("x")).as("m"))
-        .groupBy(ks: _*)
-        .agg(array_sort(collect_list(struct(col("d"), col("m")))).as("ps"))
-        .select(ks :+ expr("transform(ps, p -> p.m)").as("c"): _*))
+      val model = means.collect().toSeq.groupBy(_.toSeq.take(nk)).map {
+        case (key, ms) =>
+          Row.fromSeq(key :+ ms.sortBy(_.getInt(nk)).map(_.get(nk + 1)))
+      }
+      out(seeds.sparkSession.createDataFrame(model.toSeq.asJava,
+        StructType(means.schema.take(nk) :+
+          StructField("c", ArrayType(means.schema(nk + 1).dataType)))))
     }
   }
 
   /** Cosine-space k-means over the embedding corpus — the
     * centroid-training job that feeds IVF: [[lloyd]] with the flat
-    * cosine argmax ([[assignCells]]) and a float mean. The result is
-    * localCheckpoint'd once: k×dim doubles are model state, and
-    * truncating the lineage keeps downstream plans from replaying
-    * every training pass. */
+    * cosine argmax ([[assignCells]]) and a float mean. The k×dim
+    * doubles are model state held on the driver: the result is a local
+    * relation, so downstream plans never replay a training pass. */
   def kmeansCentroids(e: DataFrame, k: Int, iters: Int,
                       sampleMod: Int = 10): DataFrame = {
     // train on a deterministic key-modulo sample (default ~10%):
@@ -484,7 +493,6 @@ object VectorOps extends QueryPack {
       assignCells(train, _),
       _.select(col("cell").as("cent_id"), col("c").as("c_emb"))
         .withColumn("c_nrm", l2Norm(col("c_emb"))))
-      .localCheckpoint(true)
   }
 
   /** IVF-style ANN: coarse-quantize the corpus into k cells (nearest
@@ -559,11 +567,11 @@ object VectorOps extends QueryPack {
     // float SUMS are partition-order-sensitive; integer sums are not
     // (graph_pagerank's picorank argument, applied to k-means).
     //
-    // Scale shape per pass, unchanged from the float version: the
-    // corpus never shuffles (broadcast k g-centroids, struct-min
-    // argmin reduces map-side); the update shuffles k partial rows of
-    // dim integer sums after map-side combine — model-sized. The
-    // g-table is checkpointed once and feeds all 4 assignment passes.
+    // Scale shape per pass: the corpus never shuffles (the argmin is
+    // a projection folding over the driver-held k centroids); the
+    // update shuffles k×dim partial integer sums after map-side
+    // combine — model-sized. The g-table is checkpointed once and
+    // feeds all 4 assignment passes.
     val e = emb(s, dir)
       .select($"vec_id", $"label",
         expr("transform(emb, v -> cast(round(v * 1000000) as bigint))")
@@ -600,29 +608,38 @@ object VectorOps extends QueryPack {
     * with g on the 1e-6 integer grid and should be checkpointed by
     * the caller (it feeds iters+1 assignment passes). Returns the
     * final assignment (vec_id, label, g, cell, d2) and the final
-    * integer centroids (cid, cg). The loop is [[lloyd]] with the
-    * integer squared-L2 argmin and a mean re-snapped to the grid;
-    * every pass's centroids are pinned. */
+    * integer centroids (cid, cg), a local relation. The loop is
+    * [[lloyd]] with the integer squared-L2 argmin and a mean re-snapped
+    * to the grid; the model stays on the driver between passes and
+    * nothing is pinned.
+    *
+    * The assignment is one projection over `eg`: the model enters the
+    * plan as ONE literal array of (cid, cg), never a k-wide expression
+    * tree (k = ⌈√n⌉ for SemDeDup), and `aggregate` folds
+    * `least(struct(d2, cid))` over it from a null start (`least` skips
+    * nulls). `least` on the struct is `min(struct(d2, cid))`'s order,
+    * so the argmin ties to the lower cid. No cross join, no regroup of
+    * the corpus by vec_id. */
   private[graft] def gridLloyd(eg: DataFrame, k: Int,
                                iters: Int): (DataFrame, DataFrame) = {
     import eg.sparkSession.implicits._
-    // native codegen'd kernel — value-identical to the HOF spelling
+    // long_sqdist is value-identical to the HOF spelling
     // `aggregate(zip_with(g, cg, (x,y) -> (x-y)*(x-y)), 0L, ...)`
-    // (exact integer sums are order-free) but a primitive loop; this
-    // is the n·k hot loop of every Lloyd's pass
-    def assign(c: DataFrame): DataFrame = eg.crossJoin(broadcast(c))
-      .withColumn("d2",
-        graft.functions.VecFunctions.longSqDist($"g", $"cg"))
-      .groupBy($"vec_id")
-      .agg(min(struct($"d2", $"cid")).as("m"),
-           first($"g").as("g"), first($"label").as("label"))
-      .select($"vec_id", $"label", $"g",
-              $"m.cid".as("cell"), $"m.d2".as("d2"))
+    // (exact integer sums are order-free) but a primitive loop
+    def assign(c: DataFrame): DataFrame = {
+      val model = typedLit(c.collect().toSeq.map(r => (r.getLong(0), r.getSeq[Long](1))))
+      val near = aggregate(model, lit(null).cast("struct<d2: bigint, cid: bigint>"),
+        (best, x) => least(best, struct(
+          graft.functions.VecFunctions.longSqDist($"g", x("_2")).as("d2"),
+          x("_1").as("cid"))))
+      eg.select($"vec_id", $"label", $"g", near.as("m"))
+        .select($"vec_id", $"label", $"g", $"m.cid".as("cell"), $"m.d2".as("d2"))
+    }
     val seeds = lloydSeeds(eg, k).select($"vec_id".as("cid"), $"g".as("cg"))
     def gridMean(x: Column): Column =
       round(sum(x).cast("double") / count(lit(1)).cast("double")).cast("long")
     val cent = lloyd(seeds, iters, Seq("cell"), "g", gridMean)(
-      assign, _.select($"cell".as("cid"), $"c".as("cg")).localCheckpoint(true))
+      assign, _.select($"cell".as("cid"), $"c".as("cg")))
     (assign(cent), cent)
   }
 
@@ -858,8 +875,8 @@ object VectorOps extends QueryPack {
     * pass trains all 8 codebooks), with the [[assignPq]] argmin and a
     * float mean. Seeds are the stratified vec_ids' subvectors;
     * training uses the same 10% key-modulo sample as the IVF coarse
-    * quantizer. Result (m·k rows of dsub-dim centroids) is
-    * localCheckpoint'd model state. */
+    * quantizer. Result (m·k rows of dsub-dim centroids) is model state
+    * held on the driver, a local relation. */
   private def pqCodebook(e: DataFrame, iters: Int): DataFrame = {
     val train = subvecs(e.where(pmod(col("vec_id"), lit(10)) === 0))
     val ids = lloydSeeds(e, PqK).select(col("vec_id"))
@@ -871,7 +888,6 @@ object VectorOps extends QueryPack {
     lloyd(seeds, iters, Seq("sub", "cid"), "sv", avg)(
       assignPq(train, _),
       _.withColumnRenamed("c", "cv").withColumn("ncv", l2Norm(col("cv"))))
-      .localCheckpoint(true)
   }
 
   /** ANN over PQ codes with asymmetric-distance (ADC) scoring — the

@@ -197,11 +197,6 @@ class PlanSpec extends AnyFunSuite {
       "sim_search_quant",  // same broadcast query-set shape, int8 codes
       "sim_search_ivf",    // broadcast 16-row centroid table for assign
       "sim_knn_join_ann",  // same broadcast centroid assign/probe shape
-      "embed_kmeans",      // same broadcast k-centroid assign shape
-      "embed_semdedup",    // broadcast centroid assign; the PAIR join
-                           // itself is an equi-join on cell id
-      "pipeline_curate_embed", // same verdicts machinery + broadcast
-                           // k-row percentile thresholds
       "dq_expect",         // crossJoin of three 1-row audit aggregates
       "sim_search_rerank", // same centroid/query-side broadcasts; the
                            // rerank fetch itself is a broadcast HASH join
@@ -224,6 +219,17 @@ class PlanSpec extends AnyFunSuite {
       }
     assert(offenders.isEmpty,
       "quadratic join strategy in: " + offenders.mkString(", "))
+  }
+
+  test("building embed_kmeans submits at most 2·iters + 2 jobs") {
+    // the g-table pin, the seed collect, and per Lloyd's pass (iters =
+    // 3) one model-sized aggregate: its shuffle map stage and its
+    // collect. The model stays on the driver, so no pass pins or
+    // cross-joins the corpus. The first build warms the footer memo.
+    val build = SparkEntry.queries("embed_kmeans")
+    build(spark, SparkSpec.sfDir)
+    val jobs = SparkSpec.jobsDuring(build(spark, SparkSpec.sfDir))
+    assert(jobs <= 2 * 3 + 2, s"$jobs build jobs")
   }
 
   test("sim_search_ivf probes inverted lists via a cell-equi join with broadcast queries") {

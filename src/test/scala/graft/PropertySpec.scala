@@ -543,16 +543,29 @@ class PropertySpec extends AnyFunSuite {
     // with no members drops out, and each mean re-snaps half away from
     // zero as Spark's round does. The narrow coordinate span forces
     // distance ties and .5 means; the wide one is the 1e-6 grid's range.
+    // Trial 4 has one centroid. Trial 5 has 3 distinct points under 6
+    // seeds, so duplicate seeds tie, cells empty and the model shrinks
+    // below k. Trial 6 plants a point equidistant from seeds 100 and 1,
+    // which arrive higher cid first in seed order, and one equidistant
+    // from seeds 200 and 201, which arrive lower cid first.
     import spark.implicits._
-    val n = 40; val dim = 8; val k = 4; val iters = 3
-    for ((trial, span) <- Seq(1 -> 3L, 2 -> 3L, 3 -> 1000000L)) {
+    val n = 40; val dim = 8; val iters = 3
+    def grid(span: Long): Gen[Seq[Long]] = Gen.listOfN(dim, Gen.chooseNum(-span, span))
+    def random(trial: Int, point: Gen[Seq[Long]]): Seq[(Long, Seq[Long])] = {
       val ids = Gen.pick(n, 0L until 1000L)
         .apply(Gen.Parameters.default, rng.Seed(500L + trial)).get.toSeq
-      val gs = Gen.listOfN(n, Gen.listOfN(dim, Gen.chooseNum(-span, span)))
-        .apply(Gen.Parameters.default, rng.Seed(600L + trial)).get
-      val corpus: Map[Long, Seq[Long]] = ids.zip(gs).toMap
+      ids.zip(Gen.listOfN(n, point)
+        .apply(Gen.Parameters.default, rng.Seed(600L + trial)).get)
+    }
+    val three = Gen.oneOf(Seq(0L, 5L, -5L).map(x => Seq.fill(dim)(x)))
+    val ties = Seq(100L -> Seq(-2L, 0L), 1L -> Seq(2L, 0L), 50L -> Seq(0L, 0L),
+      200L -> Seq(-2L, 10L), 201L -> Seq(2L, 10L), 60L -> Seq(0L, 10L))
+    for ((trial, k, rows) <- Seq((1, 4, random(1, grid(3))), (2, 4, random(2, grid(3))),
+        (3, 4, random(3, grid(1000000))), (4, 1, random(4, grid(3))),
+        (5, 6, random(5, three)), (6, 4, ties))) {
+      val corpus: Map[Long, Seq[Long]] = rows.toMap
       val (fin, cent) = graft.vec.VectorOps.gridLloyd(
-        ids.zip(gs).map { case (id, g) => (id, 0, g) }.toDF("vec_id", "label", "g"),
+        rows.map { case (id, g) => (id, 0, g) }.toDF("vec_id", "label", "g"),
         k, iters)
       val got = fin.select($"vec_id", $"cell", $"d2").collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -563,11 +576,11 @@ class PropertySpec extends AnyFunSuite {
       def assign(c: Map[Long, Seq[Long]]): Map[Long, (Long, Long)] =
         corpus.map { case (id, g) =>
           id -> c.iterator.map { case (cid, cg) => (d2(g, cg), cid) }.min }
-      val seeds = ids.sortBy(id => (id % 100, id)).take(k)
+      val seeds = corpus.keys.toSeq.sortBy(id => (id % 100, id)).take(k)
         .map(id => id -> corpus(id)).toMap
       val expCent = (1 to iters).foldLeft(seeds) { (c, _) =>
         assign(c).groupBy(_._2._2).map { case (cid, members) =>
-          cid -> (0 until dim).map { d =>
+          cid -> corpus.head._2.indices.map { d =>
             val s = members.keys.toSeq.map(corpus(_)(d)).sum
             BigDecimal(s.toDouble / members.size.toDouble)
               .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
@@ -577,6 +590,7 @@ class PropertySpec extends AnyFunSuite {
       val exp = assign(expCent).map { case (id, (dd, cid)) => id -> (cid, dd) }
       assert(gotCent == expCent, s"trial $trial: centroids")
       assert(got == exp, s"trial $trial: assignments")
+      if (trial == 5) assert(gotCent.size < k, "trial 5: no cell emptied")
     }
   }
 

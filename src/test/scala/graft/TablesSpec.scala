@@ -1,12 +1,11 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.command.CreateViewCommand
@@ -24,31 +23,6 @@ import graft.io.Tables
 class TablesSpec extends AnyFunSuite {
   lazy val spark = SparkSpec.session
   import spark.implicits._
-
-  /** Spark jobs submitted from this thread while `body` runs. Job
-    * starts reach listeners asynchronously but in order, so a sentinel
-    * job run after `body` is seen only once every job before it is. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val sentinelSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach { g =>
-            if (g == "tables-spec-sentinel") sentinelSeen.countDown() else groups.add(g)
-          }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("tables-spec-probe", "probe")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("tables-spec-sentinel", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "sentinel job never reached the listener")
-      groups.toArray.count(_ == "tables-spec-probe")
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** `CreateViewCommand`s `session` runs while `body` runs. Listener
     * callbacks arrive asynchronously but in order, and a callback still
@@ -99,11 +73,11 @@ class TablesSpec extends AnyFunSuite {
   test("a second read of the same table submits no Spark job") {
     val dir = tempDir("graft_tables_jobs")
     spark.range(5).toDF("n_nationkey").write.parquet(s"$dir/nation.parquet")
-    val first = jobsDuring(Tables.t(spark, dir, "nation"))
+    val first = SparkSpec.jobsDuring(Tables.t(spark, dir, "nation"))
     assert(first >= 1, s"the first read should infer the footer schema, ran $first jobs")
-    assert(jobsDuring(Tables.t(spark, dir, "nation")) == 0)
+    assert(SparkSpec.jobsDuring(Tables.t(spark, dir, "nation")) == 0)
     // the bare read the memo replaces pays inference every time
-    assert(jobsDuring(spark.read.parquet(s"$dir/nation.parquet")) >= 1)
+    assert(SparkSpec.jobsDuring(spark.read.parquet(s"$dir/nation.parquet")) >= 1)
   }
 
   test("overwriting a table with a different schema re-infers it") {
@@ -228,7 +202,7 @@ class TablesSpec extends AnyFunSuite {
     val fresh = spark.newSession()
     Tables.t(fresh, SparkSpec.sfDir, "nation")
     Tables.events(fresh, SparkSpec.sfDir)
-    assert(jobsDuring(Tables.t(fresh, SparkSpec.sfDir, "nation")) == 0)
+    assert(SparkSpec.jobsDuring(Tables.t(fresh, SparkSpec.sfDir, "nation")) == 0)
   }
 
   test("building sql_tpch_q21 after sql_tpch_q5 in a fresh session submits no job") {
@@ -237,6 +211,6 @@ class TablesSpec extends AnyFunSuite {
     val fresh = spark.newSession()
     val q = graft.sql.SqlQueries.queries
     q("sql_tpch_q5")(fresh, SparkSpec.sfDir)
-    assert(jobsDuring(q("sql_tpch_q21")(fresh, SparkSpec.sfDir)) == 0)
+    assert(SparkSpec.jobsDuring(q("sql_tpch_q21")(fresh, SparkSpec.sfDir)) == 0)
   }
 }

@@ -11,7 +11,11 @@
 # parent first on even pairs and the change first on odd ones, so a
 # drifting host loads both sides alike. Prints each run's correct and
 # failed counts, then per end-to-end metric of BENCHMARK.json: both
-# medians, the parent's quartiles and the pairs the change won. Each
+# medians, the parent's quartiles, the pairs the change won and a
+# verdict: `gain` when the change wins at least 9 in 10 pairs and its
+# median beats the parent's by more than the parent's q3 - q1, `worse`
+# when its median is worse than the parent's by more than the metric's
+# `bound` (a fraction of the parent's median), `—` otherwise. Each
 # run's log and result line stay in the printed output directory.
 set -euo pipefail
 
@@ -66,7 +70,7 @@ for s in seeds:
         r = by.get((side, s))
         cells.append("no result" if r is None else f"{r['correct']!s:>5} {r['failed']}/{r['attempted']}")
     print(f"{s:<6} {cells[0]:<23} {cells[1]}")
-print(f"{'metric':<18} {'parent':>9} {'change':>9} {'delta':>8} {'parent q1..q3':>17}  wins")
+print(f"{'metric':<18} {'parent':>9} {'change':>9} {'delta':>8} {'parent q1..q3':>17}  wins  verdict")
 for m in spec:
     name, lower = m["name"], m["better"] == "lower"
     pairs = [(by[("parent", s)]["metrics"][name]["value"], by[("change", s)]["metrics"][name]["value"])
@@ -81,6 +85,14 @@ for m in spec:
     q = statistics.quantiles(p, n=4, method="inclusive") if len(p) > 1 else [p[0]] * 3
     wins = sum((b < a) if lower else (b > a) for a, b in pairs)
     delta = f"{(cm - pm) / pm:+.1%}" if pm else "n/a"
-    print(f"{name:<18} {pm:9.4f} {cm:9.4f} {delta:>8} {q[0]:8.3f}..{q[2]:<8.3f} {wins}/{len(pairs)}")
+    gain = (pm - cm) if lower else (cm - pm)
+    if 10 * wins >= 9 * len(pairs) and gain > q[2] - q[0]:
+        verdict = "gain"
+    elif -gain > m["bound"] * abs(pm):
+        verdict = "worse"
+    else:
+        verdict = "—"
+    wl = f"{wins}/{len(pairs)}"
+    print(f"{name:<18} {pm:9.4f} {cm:9.4f} {delta:>8} {q[0]:8.3f}..{q[2]:<8.3f} {wl:>5}  {verdict}")
 EOF
 echo "runs kept in $out" >&2

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryPack
@@ -29,9 +29,9 @@ object Joins extends QueryPack {
     * DISTINCT parts is excluded from pair generation entirely: at
     * that size it is an aggregation artifact (bot traffic, wholesale
     * consolidation, a skewed key), not co-purchase signal, and its
-    * pair space is quadratic by definition. Mirrored verbatim in the
-    * DuckDB oracles (graph_degree / graph_jaccard / graph_triangles)
-    * and in the graph_cc union-find spec reference, so the capped
+    * pair space is quadratic by definition. Applied only in
+    * [[basketPairs]], interpolated into the five graph DuckDB oracles
+    * and read by the graph_cc union-find spec reference, so the capped
     * SEMANTICS are checked on the skew world where the cap does real
     * work — the same discipline as the shingle cap. 1024 caps the
     * per-basket in-row expansion at ~524k pair structs (~8 MB), and
@@ -54,10 +54,41 @@ object Joins extends QueryPack {
     * pair must share RARE neighbors to surface. This is the standard
     * recommender trade (a shared ultra-popular item is noise, not
     * affinity) and exactly the df-cap/set-size split dedup_ngram
-    * already pins. Mirrored verbatim in the DuckDB oracle. 256 bounds
-    * per-neighbor wedge work at 65k pairs and sits far above any
-    * clean-world within-brand degree (~tens). */
+    * already pins. Interpolated into graph_jaccard's DuckDB oracle.
+    * 256 bounds per-neighbor wedge work at 65k pairs and sits far
+    * above any clean-world within-brand degree (~tens). */
   val hubNeighborCap = 256
+
+  /** Every unordered pair of a sorted, distinct array as
+    * `array<struct<a, b>>` with a < b, row-major: (x0, x1), (x0, x2),
+    * …, (x1, x2), …. The combination runs inside the row (array
+    * HOFs), so no self-join ever materializes the group × group
+    * space; the caller bounds the array, since it yields C(n, 2)
+    * structs. */
+  private[graft] def pairsOf(arr: Column): Column =
+    flatten(transform(arr, (x, i) =>
+      transform(slice(arr, i + 2, size(arr)), y => struct(x.as("a"), y.as("b")))))
+
+  /** The co-purchase pair stream every graph query reads: `(by…, a,
+    * b)` with a < b, one row per basket holding both parts (no
+    * distinct; each caller dedups, counts or samples as it needs). A
+    * basket is an `l_orderkey` group of `li`, refined by `by`
+    * (graph_jaccard blocks by brand, so cross-brand pairs never
+    * materialize). One shuffle on the basket key with a map-side
+    * partial collect, a basket past [[hotBasketCap]] distinct parts
+    * dropped, then [[pairsOf]] over the sorted part list. The
+    * oracles' spelling — a self-join of the deduped, capped (order,
+    * part) rows on `l.o = r.o AND l.p < r.p` — gives the same
+    * multiset but shuffles the fact table twice and sorts both sides:
+    * measured 1.8 s vs 0.9 s on graph_triangles at sf0.1. */
+  private[graft] def basketPairs(li: DataFrame, by: Column*): DataFrame = {
+    val baskets = li.groupBy(col("l_orderkey") +: by: _*)
+      .agg(sort_array(array_distinct(collect_list(col("l_partkey")))).as("ps"))
+      .where(size(col("ps")) <= hotBasketCap)
+    val keys = baskets.columns.slice(1, by.size + 1).toSeq.map(col)
+    baskets.select(keys :+ explode(pairsOf(col("ps"))).as("p"): _*)
+      .select(keys ++ Seq(col("p.a").as("a"), col("p.b").as("b")): _*)
+  }
 
   /** Dim join with tiny build sides → BroadcastHashJoinExec. */
   def joinBroadcast(s: SparkSession, dir: String): DataFrame = {
@@ -267,7 +298,7 @@ object Joins extends QueryPack {
   }
 
   /** PageRank centrality over the part co-purchase graph (edges =
-    * distinct part pairs sharing an order — [[graphTriangles]]'s
+    * distinct part pairs sharing an order — [[basketPairs]]'
     * one-shuffle basket expansion, deduped): the "which SKUs anchor
     * the catalog" ranking, and the §2.3 family's iterative member
     * next to the exact CC closure and the sampled triangle count.
@@ -288,15 +319,6 @@ object Joins extends QueryPack {
   def graphPagerank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val li = t(s, dir, "lineitem").select($"l_orderkey", $"l_partkey")
-    val pairs = li
-      .groupBy($"l_orderkey")
-      .agg(sort_array(array_distinct(collect_list($"l_partkey"))).as("ps"))
-      .where(size($"ps") <= hotBasketCap)
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS a, y AS b))))"))
-        .as("p"))
-      .select($"p.a".as("a"), $"p.b".as("b"))
     // pair-volume estimate for the memory-bounding partition
     // derivation (Sessions.pairAggPartitions): measured basket shape
     // (~4 distinct parts/order → C(4,2)=6 pairs per ~4 rows) puts the
@@ -304,7 +326,7 @@ object Joins extends QueryPack {
     // sf — and the count() itself is one column-pruned metadata-cheap
     // pass, paid once before the corpus-scale work
     val estPairs = 2L * li.count()
-    graft.graph.Graph.pagerank(pairs, iters = prIters,
+    graft.graph.Graph.pagerank(basketPairs(li), iters = prIters,
         damp = prDampPm / 1000.0, edgeRowsHint = estPairs)
       .orderBy($"rank".desc, $"id".asc).limit(20)
       .select($"id", $"rank".as("rank_pico"))
@@ -350,29 +372,6 @@ object Joins extends QueryPack {
     * alone) / non-terminating (naive closure at sf0.1). The
     * driver-side union-find census check in OperatorSpec stays as the
     * in-JVM witness. */
-  /** Co-purchase pair stream (a < b, one row per order that contains
-    * the pair): the edge generator for graph_cc ONLY. graph_degree
-    * generates both edge orientations inside the row instead (a
-    * union of two prunings of this subtree would plan as two
-    * scans — the ReuseExchange-defeating shape its comment
-    * documents), and graph_jaccard blocks pairs within (order,
-    * brand) so cross-brand pairs never materialize at all. One
-    * shuffle on the order key; the per-order combination explodes
-    * inside the row (array HOF), so no self-join ever materializes
-    * the order × order space. */
-  private def copurchasePairs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    t(s, dir, "lineitem").select($"l_orderkey", $"l_partkey")
-      .groupBy($"l_orderkey")
-      .agg(sort_array(array_distinct(collect_list($"l_partkey"))).as("ps"))
-      .where(size($"ps") <= hotBasketCap)
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS a, y AS b))))"))
-        .as("p"))
-      .select($"p.a".as("a"), $"p.b".as("b"))
-  }
-
   def graphCc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // Touched-variant CC: every co-purchase vertex is on a pair by
@@ -381,8 +380,7 @@ object Joins extends QueryPack {
     // once (a separate vertices derivation would either re-run the
     // lineitem groupBy per pruned union branch or force a second
     // corpus-scale checkpoint).
-    val pairs = copurchasePairs(s, dir)
-    graft.graph.Graph.connectedComponentsStarTouched(pairs)
+    graft.graph.Graph.connectedComponentsStarTouched(basketPairs(t(s, dir, "lineitem")))
       .groupBy($"lbl").agg(count(lit(1)).as("n_members"))
       .groupBy($"n_members").agg(count(lit(1)).as("n_components"))
       .orderBy($"n_members")
@@ -411,20 +409,30 @@ object Joins extends QueryPack {
     // deduping one orientation and unpacking the endpoints map-side
     // halves the bytes through the query's one corpus-scale shuffle.
     // Same degrees: each distinct edge contributes 1 to both ends.
-    t(s, dir, "lineitem").select($"l_orderkey", $"l_partkey")
-      .groupBy($"l_orderkey")
-      .agg(sort_array(array_distinct(collect_list($"l_partkey"))).as("ps"))
-      .where(size($"ps") <= hotBasketCap)
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS a, y AS b))))"))
-        .as("p"))
-      .select($"p.a".as("a"), $"p.b".as("b"))
+    basketPairs(t(s, dir, "lineitem"))
       .distinct()
       .select(explode(array($"a", $"b")).as("v"))
       .groupBy($"v").agg(count(lit(1)).as("deg"))
       .groupBy($"deg").agg(count(lit(1)).as("n_nodes"))
       .orderBy($"deg")
+  }
+
+  /** graph_jaccard's edge builder, pre-checkpoint — package-visible so
+    * PlanSpec can lock the broadcast brand join (the checkpoint hides
+    * this subtree behind a Scan ExistingRDD in the outer plan). */
+  private[graft] def graphJaccardEdges(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val brand = t(s, dir, "part").select($"p_partkey", $"p_brand")
+    // generate WITHIN-BRAND pairs directly: brand joins onto lineitem
+    // map-side (broadcast), the basket key is (order, brand), and
+    // the per-basket combination explodes only same-brand items — the
+    // cross-brand 24/25 of the pair stream is never materialized
+    // (Σ_brand k_b² vs Σ k², the blocking applied at GENERATION).
+    basketPairs(
+        t(s, dir, "lineitem").select($"l_orderkey", $"l_partkey")
+          .join(broadcast(brand), $"l_partkey" === $"p_partkey"),
+        $"p_brand".as("brand"))
+      .distinct()
   }
 
   /** Neighbor-overlap link prediction, BRAND-scoped: Jaccard of the
@@ -435,8 +443,9 @@ object Joins extends QueryPack {
     * cross-category overlap is noise and the unblocked wedge space is
     * quadratic in the hubs — which is also why wedges only enumerate
     * at shared neighbors under [[hubNeighborCap]]; denominators keep
-    * exact degrees). Candidates come from a WEDGE equi-join
-    * on (brand, shared neighbor) — never an all-pairs product — so
+    * exact degrees). Candidates are the WEDGES at each (brand, shared
+    * neighbor), expanded in-row by [[pairsOf]] — never an all-pairs
+    * product — so
     * the pair space is Σ_brand Σ_w deg_w², bounded by the category
     * partitioning at any scale (measured: 230k wedge pairs at sf0.1
     * vs ~65M unblocked); the same blocking argument as
@@ -444,30 +453,6 @@ object Joins extends QueryPack {
     * block instead of a hashed one. Jaccard divides exact integers
     * once per pair (bit-deterministic cross-engine) and the top-20
     * plans TakeOrderedAndProject — no global sort. */
-  /** graph_jaccard's edge builder, pre-checkpoint — package-visible so
-    * PlanSpec can lock the broadcast brand join (the checkpoint hides
-    * this subtree behind a Scan ExistingRDD in the outer plan). */
-  private[graft] def graphJaccardEdges(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val brand = t(s, dir, "part").select($"p_partkey", $"p_brand")
-    // generate WITHIN-BRAND pairs directly: brand joins onto lineitem
-    // map-side (broadcast), the grouping key is (order, brand), and
-    // the per-group combination explodes only same-brand items — the
-    // cross-brand 24/25 of the pair stream is never materialized
-    // (Σ_brand k_b² vs Σ k², the blocking applied at GENERATION).
-    t(s, dir, "lineitem").select($"l_orderkey", $"l_partkey")
-      .join(broadcast(brand), $"l_partkey" === $"p_partkey")
-      .groupBy($"l_orderkey", $"p_brand")
-      .agg(sort_array(array_distinct(collect_list($"l_partkey"))).as("ps"))
-      .where(size($"ps") <= hotBasketCap)
-      .select($"p_brand".as("brand"), explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS a, y AS b))))"))
-        .as("p"))
-      .select($"brand", $"p.a".as("a"), $"p.b".as("b"))
-      .distinct()
-  }
-
   def graphJaccard(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // localCheckpoint pins the tiny edge set (~|E|/25 rows) for its
@@ -478,8 +463,8 @@ object Joins extends QueryPack {
     // neighbor w into a sorted neighbor LIST. The group size IS
     // deg(w) — the hub cut becomes a free size() filter instead of a
     // degree join — and wedge pairs explode IN-ROW from the list
-    // (the copurchasePairs combination), so the wedge self-join on
-    // (brand, w) and its two exchanges disappear. Same pairs: each
+    // ([[pairsOf]]), so the wedge self-join on (brand, w) and its two
+    // exchanges disappear. Same pairs: each
     // unordered (pa, pb) sharing neighbor w appears once per w, with
     // pa < pb from the sorted list (= the old join's pa < pb cut).
     // deg(x) also reads off the same aggregate (x's own group size).
@@ -511,11 +496,8 @@ object Joins extends QueryPack {
     // hub cut (see hubNeighborCap): wedges enumerate only at non-hub
     // shared neighbors; sdeg keeps exact degrees for the denominators
     val inter = nbrs.where(size($"ns") <= hubNeighborCap)
-      .select(explode(expr(
-        "flatten(transform(ns, (x, i) -> " +
-        "transform(slice(ns, i + 2, size(ns)), y -> struct(x AS pa, y AS pb))))"))
-        .as("p"))
-      .select($"p.pa".as("pa"), $"p.pb".as("pb"))
+      .select(explode(pairsOf($"ns")).as("p"))
+      .select($"p.a".as("pa"), $"p.b".as("pb"))
       .groupBy($"pa", $"pb").agg(count(lit(1)).as("inter"))
     inter
       .join(sdeg.select($"x".as("pa"), $"deg".as("dega")), Seq("pa"))
@@ -716,34 +698,15 @@ object Joins extends QueryPack {
     * or a vertex pair (never all-pairs); each triangle is counted
     * exactly once, at its lowest-rank vertex with the outer pair
     * canonicalized by id. */
-  def graphTriangles(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val li = t(s, dir, "lineitem").select($"l_orderkey", $"l_partkey")
-    // Edge generation: all unordered distinct-part pairs per order.
-    // ONE shuffle (groupBy orderkey, partial collect map-side) + a
-    // per-group pair expansion — the equivalent self-join formulation
-    // (the oracle's spelling) shuffles the fact table twice and sorts
-    // both sides; measured 1.8 s vs 0.9 s at sf0.1. Baskets are small
-    // (~4 parts/order) so the L² expansion per group is trivial; the
-    // pair SET is identical (sort_array + array_distinct ⇒ a < b,
-    // no self-pairs), and the downstream coin/distinct see the same
-    // edges bit-for-bit.
-    val pairs = li
-      .groupBy($"l_orderkey")
-      .agg(sort_array(array_distinct(collect_list($"l_partkey"))).as("ps"))
-      .where(size($"ps") <= hotBasketCap)
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS a, y AS b))))"))
-        .as("p"))
-      .select($"p.a".as("a"), $"p.b".as("b"))
-    // p = 1/4 ('40'/'100' of the hex space), so the count scales by
-    // 1/p³ = 64; the coin, orientation, and broadcast-closure
-    // mechanics (and why the coin must be nonlinear) live in
-    // graft.graph.Graph.triangleEstimate, property-tested against
-    // brute-force enumeration.
-    graft.graph.Graph.triangleEstimate(pairs, hexCap = "40", invP3 = 64L)
-  }
+  def graphTriangles(s: SparkSession, dir: String): DataFrame =
+    // edges: every unordered distinct-part pair per order
+    // ([[basketPairs]]); p = 1/4 ('40'/'100' of the hex space), so the
+    // count scales by 1/p³ = 64; the coin, orientation, and
+    // broadcast-closure mechanics (and why the coin must be nonlinear)
+    // live in graft.graph.Graph.triangleEstimate, property-tested
+    // against brute-force enumeration.
+    graft.graph.Graph.triangleEstimate(basketPairs(t(s, dir, "lineitem")),
+        hexCap = "40", invP3 = 64L)
 
   /** Skew-safe equi join: salt the fact side into S shards and
     * replicate the dim side S times, so a hot key's rows spread over S
@@ -916,7 +879,7 @@ object Joins extends QueryPack {
     "graph_pagerank" ->
       s"""WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
          |            FROM lineitem),
-         |ok AS (SELECT o FROM lp GROUP BY o HAVING count(*) <= 1024),
+         |ok AS (SELECT o FROM lp GROUP BY o HAVING count(*) <= $hotBasketCap),
          |lps AS (SELECT lp.o, lp.p FROM lp JOIN ok USING (o)),
          |e AS MATERIALIZED (SELECT DISTINCT l.p AS a, r.p AS b
          |     FROM lps l JOIN lps r ON l.o = r.o AND l.p < r.p),
@@ -941,7 +904,7 @@ object Joins extends QueryPack {
     "graph_cc" ->
       s"""WITH RECURSIVE lp AS MATERIALIZED (
          |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-         |ok AS (SELECT o FROM lp GROUP BY o HAVING count(*) BETWEEN 2 AND 1024),
+         |ok AS (SELECT o FROM lp GROUP BY o HAVING count(*) BETWEEN 2 AND $hotBasketCap),
          |m AS MATERIALIZED (SELECT lp.o, lp.p FROM lp JOIN ok USING (o)),
          |lbl0 AS MATERIALIZED (SELECT DISTINCT p AS node, p AS lbl FROM m),
          |${(0 until 6).map(ccRound).mkString(",\n")},
@@ -962,9 +925,9 @@ object Joins extends QueryPack {
          |SELECT n_members, count(*) AS n_components
          |FROM sizes GROUP BY n_members ORDER BY n_members""".stripMargin,
     "graph_degree" ->
-      """WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+      s"""WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |            FROM lineitem),
-        |ok AS (SELECT o FROM lp GROUP BY o HAVING count(*) <= 1024),
+        |ok AS (SELECT o FROM lp GROUP BY o HAVING count(*) <= $hotBasketCap),
         |lps AS (SELECT lp.o, lp.p FROM lp JOIN ok USING (o)),
         |e AS (SELECT DISTINCT l.p AS a, r.p AS b
         |      FROM lps l JOIN lps r ON l.o = r.o AND l.p < r.p),
@@ -974,11 +937,11 @@ object Joins extends QueryPack {
         |SELECT deg, count(*) AS n_nodes FROM d
         |GROUP BY deg ORDER BY deg""".stripMargin,
     "graph_jaccard" ->
-      """WITH lpb AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p,
+      s"""WITH lpb AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p,
         |                    p_brand AS brand
         |             FROM lineitem JOIN part ON l_partkey = p_partkey),
         |ok AS (SELECT o, brand FROM lpb
-        |       GROUP BY o, brand HAVING count(*) <= 1024),
+        |       GROUP BY o, brand HAVING count(*) <= $hotBasketCap),
         |lps AS (SELECT lpb.o, lpb.p, lpb.brand
         |        FROM lpb JOIN ok USING (o, brand)),
         |e AS (SELECT DISTINCT l.p AS a, r.p AS b, l.brand
@@ -988,7 +951,7 @@ object Joins extends QueryPack {
         |        UNION ALL SELECT brand, b AS x, a AS w FROM e),
         |sd AS (SELECT x, count(*) AS deg FROM adj GROUP BY x),
         |adjw AS (SELECT adj.brand, adj.x, adj.w FROM adj
-        |         JOIN sd ON adj.w = sd.x WHERE sd.deg <= 256),
+        |         JOIN sd ON adj.w = sd.x WHERE sd.deg <= $hubNeighborCap),
         |i AS (SELECT l.x AS pa, r.x AS pb, count(*) AS inter
         |      FROM adjw l JOIN adjw r
         |        ON l.w = r.w AND l.brand = r.brand AND l.x < r.x
@@ -1058,9 +1021,9 @@ object Joins extends QueryPack {
     // only: the oracle samples the same edges (same hash) and counts
     // triangles with the naive three-way edge join
     "graph_triangles" ->
-      """WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+      s"""WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |            FROM lineitem),
-        |ok AS (SELECT o FROM lp GROUP BY o HAVING count(*) <= 1024),
+        |ok AS (SELECT o FROM lp GROUP BY o HAVING count(*) <= $hotBasketCap),
         |lps AS (SELECT lp.o, lp.p FROM lp JOIN ok USING (o)),
         |e AS (
         |  SELECT DISTINCT l.p AS a, r.p AS b

@@ -296,8 +296,11 @@ object VectorOps extends QueryPack {
     * sorted every k-row group. The heap argmax reduces the k candidate
     * rows per vector map-side (the broadcast cross join never changes
     * partitioning, so every vec_id's candidates are co-located), and
-    * `first(emb)` rides the same ObjectHashAggregate — in the common
-    * case nothing shuffles at all. */
+    * `first(emb)` rides the same ObjectHashAggregate. The planner
+    * still inserts an `Exchange hashpartitioning(vec_id)` after that
+    * partial aggregate: the corpus shuffles once per call, one row per
+    * vector carrying its embedding, norm and one-slot heap — k× fewer
+    * rows than the window did, but not zero. */
   private[graft] def assignCells(e: DataFrame, cent: DataFrame): DataFrame =
     e.crossJoin(broadcast(cent))
       .withColumn("c_cos",

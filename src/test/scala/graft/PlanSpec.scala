@@ -369,9 +369,10 @@ class PlanSpec extends AnyFunSuite {
 
   // regression lock for the round-10 graph_degree fix (union of two
   // prunings of a shared distinct subtree planned the whole
-  // pair-generation chain TWICE — 109 s vs 23 s at sf1.0): both edge
-  // orientations must be generated inside the row, giving ONE
-  // lineitem scan and one adjacency chain, no Union anywhere.
+  // pair-generation chain TWICE — 109 s vs 23 s at sf1.0): the
+  // canonical (a < b) pairs are deduped once and both endpoints
+  // explode from each distinct edge row, giving ONE lineitem scan and
+  // one adjacency chain, no Union anywhere.
   test("graph_degree plans one adjacency chain: single scan, no Union") {
     val p = plan("graph_degree")
     // formatted mode prints each node twice (tree + detail); count the

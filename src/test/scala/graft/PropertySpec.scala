@@ -636,4 +636,59 @@ class PropertySpec extends AnyFunSuite {
         s"trial $trial: the key held by exactly cap docs must pair them all")
     }
   }
+
+  test("pairsOf and basketPairs equal Scala combinations and the oracles' self-join, up to the basket cap") {
+    import spark.implicits._
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.ops.Joins.{basketPairs, hotBasketCap, pairsOf}
+    // pairsOf: sorted distinct arrays of size 0, 1, 2 and up to 40, in
+    // combinations(2)'s order
+    val arrays = Seq(Seq.empty[Long], Seq(7L), Seq(3L, 9L)) ++ (1 to 20).map { i =>
+      Gen.listOfN(2 * i, Gen.choose(0L, 100000L))
+        .apply(Gen.Parameters.default, rng.Seed(900L + i)).get.distinct.sorted
+    }
+    val expanded = arrays.toDF("xs").select(pairsOf($"xs").as("ps"))
+    assert(expanded.schema("ps").dataType.simpleString == "array<struct<a:bigint,b:bigint>>")
+    val got = expanded.collect().map(_.getSeq[Row](0).map(r => (r.getLong(0), r.getLong(1))))
+    assert(arrays.map(_.size).max >= 35)
+    arrays.zip(got).foreach { case (xs, g) =>
+      assert(g == xs.combinations(2).map(c => (c(0), c(1))).toSeq, s"pairsOf($xs)")
+    }
+
+    // basketPairs: the oracles' spelling, a self-join of the deduped,
+    // capped (order, keys…, part) rows on l.o = r.o AND l.p < r.p, as
+    // a multiset (a pair bought in two baskets is two rows)
+    def selfJoin(rows: DataFrame, keys: Seq[String]): DataFrame = {
+      val lp = rows.distinct()
+      val ok = lp.groupBy("o", keys: _*).count()
+        .where($"count" <= hotBasketCap).drop("count")
+      val lps = lp.join(ok, "o" +: keys)
+      lps.withColumnRenamed("p", "a").join(lps.withColumnRenamed("p", "b"), "o" +: keys)
+        .where($"a" < $"b").select((keys :+ "a" :+ "b").map(col): _*)
+    }
+    def sameMultiset(x: DataFrame, y: DataFrame): Unit = {
+      assert(x.columns.toSeq == y.columns.toSeq)
+      assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty)
+    }
+    val sf = new java.io.File(SparkSpec.sfDir).getParent + "/sf0.01"
+    val li = graft.io.Tables.t(spark, sf, "lineitem").select($"l_orderkey", $"l_partkey")
+    val pairs = basketPairs(li)
+    sameMultiset(pairs,
+      selfJoin(li.select($"l_orderkey".as("o"), $"l_partkey".as("p")), Nil))
+    assert(pairs.count() > pairs.distinct().count(), "no pair sits in two baskets")
+    val brand = graft.io.Tables.t(spark, sf, "part").select($"p_partkey", $"p_brand")
+    val lib = li.join(brand, $"l_partkey" === $"p_partkey")
+    sameMultiset(basketPairs(lib, $"p_brand".as("brand")),
+      selfJoin(lib.select($"l_orderkey".as("o"), $"p_brand".as("brand"),
+                          $"l_partkey".as("p")), Seq("brand")))
+
+    // the cap edge: exactly hotBasketCap distinct parts (each listed
+    // twice) yields every pair, one part more yields none
+    def basket(nParts: Int): DataFrame =
+      spark.range(nParts).select(lit(1L).as("l_orderkey"), $"id".as("l_partkey"))
+    val cap = hotBasketCap.toLong
+    assert(basketPairs(basket(hotBasketCap).union(basket(hotBasketCap))).count()
+      == cap * (cap - 1) / 2)
+    assert(basketPairs(basket(hotBasketCap + 1)).count() == 0L)
+  }
 }

@@ -35,6 +35,23 @@ if grep -rnE '\.conf\.(set|unset)\(' src/main/scala | grep -v '^src/main/scala/g
   echo "GATE FAIL: scope a conf change with graft.config.Sessions.withConf"; exit 1
 fi
 
+# every co-purchase basket expansion goes through graft.ops.Joins'
+# basketPairs and pairsOf, so the hot-basket policy lives in one place:
+# the in-row pair literal (slice(.., i + 2 ..)) and a Spark-side
+# hotBasketCap comparison may appear only inside those two defs
+echo "== gate: basket pair expansion only in Joins.pairsOf / basketPairs =="
+pair_copies=$(find src/main/scala -name '*.scala' -print0 | sort -z | xargs -0 awk '
+  FNR == 1 { d = "" }
+  match($0, /def [A-Za-z0-9_]+/) { d = substr($0, RSTART + 4, RLENGTH - 4) }
+  /slice\([^,]*, *i *\+ *2/ || /[<>]=? *([A-Za-z_][A-Za-z0-9_]*\.)*hotBasketCap/ {
+    if (FILENAME !~ /\/graft\/ops\/Joins\.scala$/ || (d != "pairsOf" && d != "basketPairs"))
+      print FILENAME ":" FNR ": " $0
+  }')
+if [[ -n "$pair_copies" ]]; then
+  echo "$pair_copies"
+  echo "GATE FAIL: expand co-purchase pairs with graft.ops.Joins.basketPairs / pairsOf"; exit 1
+fi
+
 echo "== gate: compile (main + test) =="
 sbt -batch Test/compile > /tmp/gate_compile.log 2>&1 \
   || { tail -30 /tmp/gate_compile.log; echo "GATE FAIL: compile"; exit 1; }
